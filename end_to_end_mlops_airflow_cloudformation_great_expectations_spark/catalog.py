@@ -139,15 +139,14 @@ def spread_narrow(df: DataFrame, key: str | None = None) -> DataFrame:
                 .sizeInBytes()
             )
         )
-        mpb = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-            .lower()
-            .removesuffix("b")
-            .removesuffix("m")
-            or str(128 << 20)
+        # Spark's own byte-string parser: "1g", "64k", "128m" and plain
+        # byte counts all mean what the scan splitter takes them to mean
+        java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        mpb = java_utils.byteStringAsBytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
-        if mpb < (1 << 20):  # conf given in MB form ("128m")
-            mpb <<= 20
+        if mpb <= 0:
+            return df
     except Exception:
         return df
     if size // mpb + 1 < par:

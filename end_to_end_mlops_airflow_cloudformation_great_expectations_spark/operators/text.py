@@ -31,11 +31,24 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS_EN = LANG_MARKERS["en"] + ["on", "with", "as", "at", "by", "an"]
 
 
-def words(text: Column) -> Column:
-    """Whitespace tokens of lowercased text (empty strings removed)."""
-    return F.filter(
-        F.split(F.lower(text), "\\s+"), lambda w: F.length(w) > 0
-    )
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# The word-level helpers take a column NAME and return one ``F.expr``:
+# built from Python-lambda higher-order functions, the same expression
+# costs one Py4J round trip per node and lambda variable at plan build,
+# ~15-20 ms per higher-order function; the SQL text is parsed in one.
+
+
+def _words_sql(text: str) -> str:
+    return f"filter(split(lower(`{text}`), '\\\\s+'), w -> length(w) > 0)"
+
+
+def words(text: str) -> Column:
+    """Whitespace tokens of lowercased ``text`` (empty strings removed)."""
+    return F.expr(_words_sql(text))
 
 
 def token_count(text: Column) -> Column:
@@ -48,48 +61,58 @@ def token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(TOKEN_REGEX)).cast("long")
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
+def _stopword_ratio_sql(text: str, stopwords: list[str] | None = None) -> str:
     # try_divide: empty/whitespace-only docs have zero words; ANSI mode
     # (Spark 4 default) turns x/0 into a hard error, and real corpora
     # contain empty documents
-    ws = words(text)
-    sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS_EN)])
-    return F.try_divide(
-        F.size(F.filter(ws, lambda w: F.array_contains(sw, w))), F.size(ws)
+    ws = _words_sql(text)
+    sw = ", ".join(_sql_str(s) for s in (stopwords or STOPWORDS_EN))
+    return (
+        f"try_divide(size(filter({ws}, w -> array_contains(array({sw}), w))),"
+        f" size({ws}))"
     )
 
 
-def punct_ratio(text: Column) -> Column:
-    return F.try_divide(
-        F.length(F.regexp_replace(text, "[^.,;:!?'\"()-]", "")), F.length(text)
+def stopword_ratio(text: str, stopwords: list[str] | None = None) -> Column:
+    return F.expr(_stopword_ratio_sql(text, stopwords))
+
+
+def _punct_ratio_sql(text: str) -> str:
+    punct = _sql_str("[^.,;:!?'\"()-]")
+    return (
+        f"try_divide(length(regexp_replace(`{text}`, {punct}, '')),"
+        f" length(`{text}`))"
     )
 
 
-def mean_word_len(text: Column) -> Column:
-    ws = words(text)
-    return F.try_divide(
-        F.aggregate(
-            F.transform(ws, lambda w: F.length(w).cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        F.size(ws),
+def punct_ratio(text: str) -> Column:
+    return F.expr(_punct_ratio_sql(text))
+
+
+def _mean_word_len_sql(text: str) -> str:
+    ws = _words_sql(text)
+    return (
+        f"try_divide(aggregate(transform({ws}, w -> CAST(length(w) AS DOUBLE)),"
+        f" 0D, (acc, x) -> acc + x), size({ws}))"
     )
 
 
-def quality_score(text: Column) -> Column:
+def mean_word_len(text: str) -> Column:
+    return F.expr(_mean_word_len_sql(text))
+
+
+def quality_score(text: str) -> Column:
     """Composite [0,1] heuristic quality: length in a sane band, words
     not too short/long, some stopword mass, punctuation not dominant.
     (The C4/Gopher-style rule family, expression-only.)"""
-    n_words = F.size(words(text))
-    len_ok = F.when((n_words >= 5) & (n_words <= 10000), 1.0).otherwise(0.0)
-    mwl = mean_word_len(text)
-    mwl_ok = F.when((mwl >= 2.0) & (mwl <= 12.0), 1.0).otherwise(0.0)
-    sw = stopword_ratio(text)
-    sw_ok = F.when(sw >= 0.05, 1.0).otherwise(0.0)
-    pr = punct_ratio(text)
-    punct_ok = F.when(pr <= 0.2, 1.0).otherwise(0.0)
-    return (len_ok + mwl_ok + sw_ok + punct_ok) / 4.0
+    n_words = f"size({_words_sql(text)})"
+    mwl = _mean_word_len_sql(text)
+    return F.expr(
+        f"(CASE WHEN {n_words} >= 5 AND {n_words} <= 10000 THEN 1D ELSE 0D END"
+        f" + CASE WHEN {mwl} >= 2D AND {mwl} <= 12D THEN 1D ELSE 0D END"
+        f" + CASE WHEN {_stopword_ratio_sql(text)} >= 0.05D THEN 1D ELSE 0D END"
+        f" + CASE WHEN {_punct_ratio_sql(text)} <= 0.2D THEN 1D ELSE 0D END) / 4D"
+    )
 
 
 def dup_line_fraction(text: Column) -> Column:
@@ -106,7 +129,7 @@ def dup_line_fraction(text: Column) -> Column:
     )
 
 
-def repeated_token_fraction(text: Column) -> Column:
+def repeated_token_fraction(text: str) -> Column:
     """1 - distinct/total tokens: high values mean keyword-stuffed or
     looping text (another Gopher repetition rule). Expression-only."""
     ws = words(text)
@@ -127,20 +150,16 @@ def fingerprint(text: Column) -> Column:
     return F.md5(canon)
 
 
-def lang_scores(text: Column) -> list[tuple[str, Column]]:
-    ws = words(text)
-    out = []
-    for lang, markers in LANG_MARKERS.items():
-        marker_arr = F.array(*[F.lit(m) for m in markers])
-        score = F.try_divide(
-            F.size(F.filter(ws, lambda w: F.array_contains(marker_arr, w))),
-            F.size(ws),
-        )
-        out.append((lang, score))
-    return out
+def lang_scores(text: str) -> list[tuple[str, Column]]:
+    """Per-language marker-hit ratio: the stopword ratio against each
+    language's marker set."""
+    return [
+        (lang, stopword_ratio(text, markers))
+        for lang, markers in LANG_MARKERS.items()
+    ]
 
 
-def lang_id(text: Column, default: str = "und") -> Column:
+def lang_id(text: str, default: str = "und") -> Column:
     """Heuristic language ID: argmax of marker-hit ratios; ``und`` when
     nothing matches. Pure expressions — no UDF, no model file."""
     scores = lang_scores(text)
@@ -161,14 +180,14 @@ def profile(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return docs.select(
         id_col,
         F.length(t).cast("long").alias("n_chars"),
-        F.size(words(t)).cast("long").alias("n_words"),
+        F.size(words(text_col)).cast("long").alias("n_words"),
         token_count(t).alias("n_tokens"),
-        F.round(mean_word_len(t), 4).alias("mean_word_len"),
-        F.round(stopword_ratio(t), 4).alias("stopword_ratio"),
-        F.round(punct_ratio(t), 4).alias("punct_ratio"),
-        F.round(quality_score(t), 2).alias("quality"),
+        F.round(mean_word_len(text_col), 4).alias("mean_word_len"),
+        F.round(stopword_ratio(text_col), 4).alias("stopword_ratio"),
+        F.round(punct_ratio(text_col), 4).alias("punct_ratio"),
+        F.round(quality_score(text_col), 2).alias("quality"),
         fingerprint(t).alias("fingerprint"),
-        lang_id(t).alias("pred_lang"),
+        lang_id(text_col).alias("pred_lang"),
     )
 
 
@@ -209,7 +228,6 @@ def bpe_merge_rounds(
     persist_rounds: bool = True,
     n_parts: int | None = None,
     checkpoint_rounds: bool = False,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Iterative BPE-style tokenizer induction: ``k`` merge rounds over
     the whitespace-token corpus, returning the chosen merge per round
@@ -253,7 +271,7 @@ def bpe_merge_rounds(
     sort-order carry and every round re-sorted). On the CHECKPOINT
     path the LogicalRDD carries neither property (Spark 4.1, repro'd
     r12), which is why the boundary carries ANN — see the in-loop
-    comment — and why ``checkpoint_every`` exists. ``return_tokens``
+    comment. ``return_tokens``
     output is renumbered dense 0..n-1 at the END (one extra window
     pass total, not per round) to keep its public contract. The lazy plan references round r's
     tokens from round r+1 twice (via the winner and via the stream),
@@ -284,12 +302,6 @@ def bpe_merge_rounds(
     in Spark executes. The checkpointed round RDDs live on executor
     block storage; at 100 TB this is the same trade every iterative
     Spark algorithm makes (pagerank, operators/graph.py).
-    ``checkpoint_every=e`` (checkpoint path only) cuts lineage at
-    every e-th round boundary instead of every round: the skipped
-    rounds chain in-plan where the window sort order IS carried, so
-    each cut amortizes its exchange+sort, its driver planning pass
-    and its stage-materialization jobs over e rounds, at the price of
-    an ~3x-per-uncut-round (bounded by e) plan size multiplier.
 
     ``return_tokens=True`` returns the TOKENIZED corpus after the k
     merges — (doc_id, pos, sym) rows — i.e. "apply the trained
@@ -317,7 +329,7 @@ def bpe_merge_rounds(
         base = base.repartition(n_parts, "doc_id")
     tok = base.select(
         "doc_id",
-        F.posexplode(words(F.col(text_col))).alias("pos", "sym"),
+        F.posexplode(words(text_col)).alias("pos", "sym"),
     )
     from .dedup import _persist_tracked
 
@@ -344,23 +356,18 @@ def bpe_merge_rounds(
             # apply run as SEPARATE AQE plan instances, and exchange
             # reuse never crosses plan instances — without the cut each
             # re-ran the explode+sort (measured: twin 1.7 s single-task
-            # jobs at round 0). checkpoint_every=e cuts every e-th
-            # boundary: skipped rounds chain in-plan, where Spark DOES
-            # carry the window sort order (plan size grows ~3x per
-            # uncut round — bounded by e).
-            if r % checkpoint_every == 0:
-                # DISK_ONLY (r12): the checkpointed round boundary IS
-                # the corpus-scaled token stream — memory-resident
-                # checkpoint blocks starved execution memory at the
-                # 100x/4GB stress point (UNABLE_TO_ACQUIRE_MEMORY in
-                # the round-window sort; same failure class as the
-                # r11 curation-pipeline lesson: corpus payloads to
-                # disk, narrow state in memory).
-                from pyspark.storagelevel import StorageLevel
+            # jobs at round 0).
+            # DISK_ONLY (r12): the checkpointed round boundary IS the
+            # corpus-scaled token stream — memory-resident checkpoint
+            # blocks starved execution memory at the 100x/4GB stress
+            # point (UNABLE_TO_ACQUIRE_MEMORY in the round-window sort;
+            # same failure class as the r11 curation-pipeline lesson:
+            # corpus payloads to disk, narrow state in memory).
+            from pyspark.storagelevel import StorageLevel
 
-                ann = ann.localCheckpoint(
-                    eager=False, storageLevel=StorageLevel.DISK_ONLY
-                )
+            ann = ann.localCheckpoint(
+                eager=False, storageLevel=StorageLevel.DISK_ONLY
+            )
         elif persist_rounds:
             ann = _persist_tracked(ann, fresh=(r == 0))
         counts = (
@@ -456,7 +463,7 @@ def bpe_merge_rounds(
 
 
 def chunk_tokens(
-    text: Column, size: int = 64, stride: int = 48
+    text: str, size: int = 64, stride: int = 48
 ) -> Column:
     """Fixed-size overlapping token windows — the CHUNKING step every
     retrieval / pretraining pipeline applies before embedding or

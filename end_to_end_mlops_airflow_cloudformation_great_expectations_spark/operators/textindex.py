@@ -45,7 +45,7 @@ def _bm25_tables(
 ) -> dict[str, DataFrame]:
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        text.words(F.col(text_col)).alias("ws"),
+        text.words(text_col).alias("ws"),
     )
     doclens = toks.select(
         "doc_id", F.size("ws").cast("long").alias("dl")

@@ -113,12 +113,11 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14: C4/Gopher-style quality heuristics (length band, word
     shape, stopword mass, punctuation density) → composite score."""
     d = _docs(spark, sf_dir)
-    t = F.col("text")
     return d.select(
         "doc_id",
-        F.round(text.stopword_ratio(t), 4).alias("stopword_ratio"),
-        F.round(text.punct_ratio(t), 4).alias("punct_ratio"),
-        F.round(text.quality_score(t), 2).alias("quality"),
+        F.round(text.stopword_ratio("text"), 4).alias("stopword_ratio"),
+        F.round(text.punct_ratio("text"), 4).alias("punct_ratio"),
+        F.round(text.quality_score("text"), 2).alias("quality"),
     )
 
 
@@ -180,7 +179,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14: marker-ratio language heuristic, argmax with deterministic
     tie order (en,de,fr,es,zh), 'und' when no markers hit."""
     return _docs(spark, sf_dir).select(
-        "doc_id", text.lang_id(F.col("text")).alias("pred_lang")
+        "doc_id", text.lang_id("text").alias("pred_lang")
     )
 
 
@@ -452,7 +451,7 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.round(text.dup_line_fraction(t), 4).alias("dup_line_frac"),
-        F.round(text.repeated_token_fraction(t), 4).alias("rep_token_frac"),
+        F.round(text.repeated_token_fraction("text"), 4).alias("rep_token_frac"),
     )
 
 
@@ -647,7 +646,7 @@ def decontamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir).select(
         "doc_id",
         F.md5(
-            F.array_join(F.slice(words(F.col("text")), 1, 8), " ")
+            F.array_join(F.slice(words("text"), 1, 8), " ")
         ).alias("prefix_fp"),
         hash_split_col(F.col("doc_id")).alias("split"),
     )
@@ -704,7 +703,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — no float ordering crosses the engine boundary, the rounded
     tfidf is payload, never sort key."""
     d = _docs(spark, sf_dir)
-    w = d.select("doc_id", F.explode(text.words(F.col("text"))).alias("term"))
+    w = d.select("doc_id", F.explode(text.words("text")).alias("term"))
     tf = w.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = d.agg(F.count("*").alias("n"))
@@ -779,7 +778,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, b = 1.2, 0.75
     terms = ["data", "table", "fast"]
     d = _docs(spark, sf_dir)
-    docs = d.select("doc_id", text.words(F.col("text")).alias("ws"))
+    docs = d.select("doc_id", text.words("text").alias("ws"))
     dl = docs.select("doc_id", F.size("ws").cast("long").alias("dl"))
     tf = (
         docs.select("doc_id", F.explode("ws").alias("term"))
@@ -966,7 +965,7 @@ def text_bigram_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     heads + driver merge, never a global sort). Ties at the cut break
     on pair text, so the limit is deterministic cross-engine."""
     d = _docs(spark, sf_dir)
-    ws = text.words(F.col("text"))
+    ws = text.words("text")
     pairs = F.zip_with(
         F.slice(ws, 1, F.size(ws) - 1),
         F.slice(ws, 2, F.size(ws) - 1),

@@ -1371,7 +1371,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.explode(text_ops.chunk_tokens(F.col("text"), 64, 48)).alias("c"),
+        F.explode(text_ops.chunk_tokens("text", 64, 48)).alias("c"),
     ).select(
         "doc_id",
         F.col("c.chunk_id").alias("chunk_id"),
@@ -1458,9 +1458,9 @@ def p_curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     base = d.select(
         "doc_id",
-        F.size(text_ops.words(t)).cast("long").alias("n_words"),
-        F.round(text_ops.quality_score(t), 2).alias("quality"),
-        text_ops.lang_id(t).alias("pred_lang"),
+        F.size(text_ops.words("text")).cast("long").alias("n_words"),
+        F.round(text_ops.quality_score("text"), 2).alias("quality"),
+        text_ops.lang_id("text").alias("pred_lang"),
         text_ops.fingerprint(t).alias("fp"),
     )
     w = Window.partitionBy("fp")

@@ -41,20 +41,29 @@ def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return catalog.load(spark, sf_dir, table)
 
 
-def _sqnorm(col: Column) -> Column:
-    return F.aggregate(
-        F.transform(col, lambda a: a.cast("double") * a.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+# Vector helpers take column NAMES and return one ``F.expr``: the
+# Python-lambda form of each costs ~15-20 ms of Py4J round trips at
+# plan build, the SQL text one parse.
+
+
+def _sqnorm(col: str) -> Column:
+    return F.expr(
+        f"aggregate(transform(`{col}`, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)),"
+        " 0D, (acc, x) -> acc + x)"
     )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _dot(a: str, b: str) -> Column:
+    return F.expr(
+        f"aggregate(zip_with(`{a}`, `{b}`, (x, y) -> CAST(x AS DOUBLE) * y),"
+        " 0D, (acc, x) -> acc + x)"
     )
+
+
+def _centroid_array() -> Column:
+    """Aggregate: the (i, c) centroid rows of a group as one array of
+    c ordered by i."""
+    return F.expr("transform(array_sort(collect_list(struct(i, c))), p -> p.c)")
 
 
 # --------------------------------------------------------------------
@@ -108,12 +117,7 @@ def _centroid0_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = ex0.groupBy("i").agg(
         F.round(F.avg(F.col("x").cast("double")), 6).alias("c")
     )
-    cent_arr = cent.groupBy().agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))),
-            lambda p: p["c"],
-        ).alias("carr")
-    )
+    cent_arr = cent.groupBy().agg(_centroid_array().alias("carr"))
     return (
         e.select(
             "vec_id",
@@ -125,10 +129,9 @@ def _centroid0_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "is_pos",
             F.round(
-                _dot(F.col("embedding"), F.col("carr"))
+                _dot("embedding", "carr")
                 / F.nullif(
-                    F.sqrt(_sqnorm(F.col("embedding")))
-                    * F.sqrt(_sqnorm(F.col("carr"))),
+                    F.sqrt(_sqnorm("embedding")) * F.sqrt(_sqnorm("carr")),
                     F.lit(0.0),
                 ),
                 6,
@@ -426,7 +429,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles at large); totals are 1-row broadcasts; the top-k is
     TakeOrderedAndProject, never a global sort."""
     d = _t(spark, sf_dir, "documents")
-    ws = text.words(F.col("text"))
+    ws = text.words("text")
     toks = d.select(F.explode(ws).alias("w"))
     uni = toks.groupBy("w").agg(F.count("*").alias("cw"))
     tw = uni.agg(F.sum("cw").cast("double").alias("tw"))
@@ -490,9 +493,8 @@ def _rrf_sem_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic arm: cosine of every embedding to the query-by-example
     vector (vec_id {qid}), top-{k} by (sim DESC, vec_id ASC)."""
     e = _t(spark, sf_dir, "embeddings")
-    qv = (
-        e.filter(F.col("vec_id") == _QUERY_VEC_ID)
-        .select(F.col("embedding").alias("qv"))
+    qv = e.filter(F.col("vec_id") == _QUERY_VEC_ID).select(
+        F.expr("transform(embedding, a -> CAST(a AS DOUBLE))").alias("qv")
     )
     return (
         e.select("vec_id", "embedding")
@@ -500,12 +502,9 @@ def _rrf_sem_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.round(
-                _dot(F.col("embedding"), F.transform(
-                    F.col("qv"), lambda a: a.cast("double")
-                ))
+                _dot("embedding", "qv")
                 / F.nullif(
-                    F.sqrt(_sqnorm(F.col("embedding")))
-                    * F.sqrt(_sqnorm(F.col("qv"))),
+                    F.sqrt(_sqnorm("embedding")) * F.sqrt(_sqnorm("qv")),
                     F.lit(0.0),
                 ),
                 6,
@@ -744,12 +743,7 @@ def a_conformal_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = ex.groupBy("clabel", "i").agg(
         F.round(F.avg(F.col("x").cast("double")), 6).alias("c")
     )
-    cent_arr = cent.groupBy("clabel").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))),
-            lambda p: p["c"],
-        ).alias("carr")
-    )
+    cent_arr = cent.groupBy("clabel").agg(_centroid_array().alias("carr"))
     sims = (
         e.select(
             "vec_id",
@@ -762,10 +756,9 @@ def a_conformal_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "clabel",
             F.round(
-                _dot(F.col("embedding"), F.col("carr"))
+                _dot("embedding", "carr")
                 / F.nullif(
-                    F.sqrt(_sqnorm(F.col("embedding")))
-                    * F.sqrt(_sqnorm(F.col("carr"))),
+                    F.sqrt(_sqnorm("embedding")) * F.sqrt(_sqnorm("carr")),
                     F.lit(0.0),
                 ),
                 6,

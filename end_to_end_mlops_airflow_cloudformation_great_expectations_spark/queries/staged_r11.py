@@ -761,7 +761,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
     d = _t(spark, sf_dir, "documents")
-    ws = text_ops.words(F.col("text"))
+    ws = text_ops.words("text")
     pairs = F.zip_with(
         F.slice(ws, 1, F.size(ws) - 1),
         F.slice(ws, 2, F.size(ws) - 1),

@@ -304,7 +304,7 @@ def t_doc_intake(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         text_ops.fingerprint(t).alias("fingerprint"),
-        F.round(text_ops.quality_score(t), 2).alias("quality"),
+        F.round(text_ops.quality_score("text"), 2).alias("quality"),
     ).filter(F.col("quality") >= 0.5)
     return exact_dedup(profiled, ["fingerprint"], "doc_id")
 

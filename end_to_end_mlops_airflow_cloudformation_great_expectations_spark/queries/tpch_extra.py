@@ -444,7 +444,7 @@ def f_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return d.select(
-        "doc_id", F.posexplode(words(F.col("text"))).alias("pos", "tok")
+        "doc_id", F.posexplode(words("text")).alias("pos", "tok")
     )
 
 

@@ -44,6 +44,16 @@ SCALE_PROFILE: dict[str, str] = {
     # testdata events.parquet carries TIMESTAMP(NANOS) which the Spark
     # reader rejects by default; read as long and convert in catalog.load.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Call-site capture off: PySpark otherwise wraps every
+    # pyspark.sql.functions call to fetch the active session and
+    # spark.sql.stackTracesInDataFrameContext, set and clear
+    # PySparkCurrentOrigin in the JVM, and retry `import ipykernel` —
+    # several Py4J round trips per call, ~70 % of a typical query build's
+    # trips (a_odds_ratio: 1,223 -> 323).
+    # Errors then name no Python call site. PySpark reads this once per
+    # Python process: pyspark.errors.utils.is_debugging_enabled caches
+    # the value it sees at the first wrapped call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

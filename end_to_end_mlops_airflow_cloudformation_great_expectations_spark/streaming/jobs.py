@@ -328,7 +328,7 @@ def doc_intake_pipeline(docs: DataFrame, min_quality: float = 0.5) -> DataFrame:
         "doc_id",
         "source",
         text_ops.fingerprint(t).alias("fingerprint"),
-        F.round(text_ops.quality_score(t), 2).alias("quality"),
+        F.round(text_ops.quality_score("text"), 2).alias("quality"),
     )
     return profiled.filter(F.col("quality") >= min_quality).dropDuplicates(
         ["fingerprint"]

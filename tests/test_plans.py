@@ -6,6 +6,8 @@ results stay correct."""
 
 from __future__ import annotations
 
+import pytest
+
 from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.plans import (
     explain,
 )
@@ -735,3 +737,90 @@ def test_matryoshka_broadcasts_the_sample_not_the_corpus(spark):
     assert plan.count("BroadcastHashJoin") == 1, plan
     build = plan.split("BroadcastExchange", 1)[1]
     assert "< 100" in build, plan
+
+
+#: Py4J commands one build of each query may send, between the current
+#: count and the count before call-site capture was switched off and the
+#: text / vector helpers became SQL expressions (sf0.001, local[8]):
+#: now 61 / 323 / 273 / 315, before 791 / 1,223 / 1,105 / 1,015.
+#: Call-site capture back on gives 91 / 1,223 / 743 / 1,015; the helpers
+#: back to Python lambdas give 531 / 323 / 475 / 315.
+_BUILD_TRIP_CEILINGS = {
+    "text_quality": 200,
+    "a_odds_ratio": 600,
+    "a_brier_score": 400,
+    "a_power_analysis": 600,
+}
+
+
+def _build_trips(spark, name: str) -> int:
+    """Py4J commands sent while ``QUERIES[name]`` builds, excluding
+    py4j's ``m\\nd\\n`` garbage-collection deletes (they fire at
+    arbitrary times)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal sent
+        if not command.startswith("m\nd\n"):
+            sent += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        QUERIES[name](spark, SF_DIR)
+    finally:
+        del client.send_command
+    return sent
+
+
+def test_plan_build_round_trips_are_pinned(spark):
+    """Plan building is Py4J-bound: each JVM round trip costs ~0.1 ms
+    or more. get_spark sessions switch off PySpark's per-call call-site
+    capture, and the higher-order text / vector helpers are one SQL
+    expression each; undoing either raises a count above its ceiling."""
+    import pyspark.errors.utils as pyspark_errors
+
+    # is_debugging_enabled caches the first value it reads; re-read it
+    # from this session's conf
+    cached = pyspark_errors._enable_debugging_cache
+    pyspark_errors._enable_debugging_cache = None
+    try:
+        debugging = pyspark_errors.is_debugging_enabled()
+        for name in _BUILD_TRIP_CEILINGS:
+            QUERIES[name](spark, SF_DIR)  # warm the catalog memo
+        trips = {n: _build_trips(spark, n) for n in _BUILD_TRIP_CEILINGS}
+    finally:
+        pyspark_errors._enable_debugging_cache = cached
+    assert debugging is False
+    over = {n: c for n, c in trips.items() if c > _BUILD_TRIP_CEILINGS[n]}
+    assert not over, (over, trips)
+
+
+@pytest.mark.parametrize(
+    "mpb, rows, spreads",
+    [
+        ("1g", 1000, True),
+        ("64k", 1000, True),  # 8 KB of longs: one 64 KiB split
+        ("64k", 600_000, False),  # 4.8 MB: ~73 splits, already wide
+        ("1048576", 1000, True),
+        ("0", 1000, False),  # invalid: left as is, no ZeroDivisionError
+    ],
+)
+def test_spread_narrow_parses_max_partition_bytes(spark, mpb, rows, spreads):
+    """catalog.spread_narrow reads spark.sql.files.maxPartitionBytes
+    with Spark's byte-string parser, so unit suffixes and plain byte
+    counts mean what the scan splitter takes them to mean."""
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
+        catalog,
+    )
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    df = spark.range(rows)
+    try:
+        spark.conf.set(key, mpb)
+        assert (catalog.spread_narrow(df) is not df) == spreads
+    finally:
+        spark.conf.set(key, old)

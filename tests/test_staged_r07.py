@@ -383,8 +383,6 @@ def test_chunk_tokens_edges(spark):
     shorter than one window -> exactly one full-coverage chunk; stride
     overlap reconstructs the token stream with 16-token overlaps; the
     final partial window is kept."""
-    import pyspark.sql.functions as F
-
     from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators.text import (
         chunk_tokens,
     )
@@ -392,7 +390,7 @@ def test_chunk_tokens_edges(spark):
     rows = spark.createDataFrame(
         [(0, ""), (1, "   "), (2, "a b c"), (3, " ".join(f"t{i}" for i in range(150)))],
         "doc_id long, text string",
-    ).select("doc_id", chunk_tokens(F.col("text"), 64, 48).alias("cs")).collect()
+    ).select("doc_id", chunk_tokens("text", 64, 48).alias("cs")).collect()
     by_id = {r.doc_id: r.cs for r in rows}
     assert by_id[0] == [] and by_id[1] == []
     assert len(by_id[2]) == 1
@@ -443,15 +441,13 @@ def test_chunk_tokens_null_text_yields_no_chunks(spark):
     """NULL text must chunk to an empty array — least/greatest ignore
     nulls, so the unguarded expression fabricated a phantom 64-token
     chunk with a NULL body (real corpora contain null fields)."""
-    import pyspark.sql.functions as F
-
     from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators.text import (
         chunk_tokens,
     )
 
     rows = (
         spark.createDataFrame([(1, None), (2, "a b")], "doc_id long, text string")
-        .select("doc_id", chunk_tokens(F.col("text")).alias("cs"))
+        .select("doc_id", chunk_tokens("text").alias("cs"))
         .collect()
     )
     by_id = {r.doc_id: r.cs for r in rows}

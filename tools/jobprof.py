@@ -65,7 +65,6 @@ def main() -> None:
               f"jobs {len(jobs)}")
         prev_end = None
         for j in jobs:
-            sub = time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
             comp = j.get("completionTime")
             dur = ""
             gap = ""
@@ -80,6 +79,10 @@ def main() -> None:
                 if prev_end is not None:
                     gap = f" gap {(s - prev_end).total_seconds():6.3f}s"
                 prev_end = e
+            else:
+                # no completion time: the next gap must not be measured
+                # from an older job's end
+                prev_end = None
             desc = (j.get("description") or j.get("name", ""))[:100]
             print(
                 f"  job {j['jobId']:4d} {dur}{gap} stages "
