@@ -7,6 +7,17 @@ path (local fs in tests, s3a:// in production); ``load`` is a thin
 wrapper over ``spark.read.parquet`` with the explicit schema applied so
 Catalyst gets non-nullable columns and the analyzer never depends on
 footer inference.
+
+``read_parquet`` is the one schema-memo reader: every parquet read the
+package repeats against its own data (canonical tables via ``load``,
+persisted index tables, the DAG's fan-out output) goes through it. It
+memoizes ONE thing, the footer schema Spark reported on the first read,
+in ``_SCHEMA_MEMO``; every call still returns a fresh DataFrame. A
+persisted index table is keyed ``<abs base_dir>/<table>`` whichever
+physical directories (base, ``{table}_new``, deltas) a read resolves
+to, so base + deltas share one schema; each ``*_index_build`` calls
+``forget_schemas(base_dir)`` before it writes, so a rebuild with new
+column types is inferred again.
 """
 
 from __future__ import annotations
@@ -24,19 +35,50 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: FOOTER schemas per (applicationId, sf_dir, table) — metadata
-#: memoization only. ``spark.read.parquet`` without a schema pays
-#: footer schema inference (a ~0.1 s driver job) on EVERY call, and
-#: the bench/driver call ``load`` a few hundred times per run against
-#: an immutable directory; re-reading with the schema Spark itself
-#: reported on the first call skips that job while returning a FRESH
-#: DataFrame (fresh attribute ids) per call — a memoized DataFrame
-#: handle broke self-joins of a table with itself ("ambiguous column"
-#: on tpch_q2/q9/q11_partsupp, caught by the full sf0.001 sweep). No
-#: rows, results or intermediates are cached; this is exactly what a
-#: metastore does with table schemas. Keyed on the applicationId so a
+#: FOOTER schemas per (applicationId, key) — metadata memoization
+#: only. ``spark.read.parquet`` without a schema pays footer schema
+#: inference (a ~0.1 s Spark job) on EVERY call, and a full query run
+#: calls ``load`` a few hundred times against an immutable directory;
+#: re-reading with the schema Spark itself reported on the first call
+#: skips that job while returning a FRESH DataFrame (fresh attribute
+#: ids) per call — a memoized DataFrame handle broke self-joins of a
+#: table with itself ("ambiguous column" on tpch_q2/q9/q11_partsupp,
+#: caught by the full sf0.001 sweep). No rows, results or
+#: intermediates are cached; this is exactly what a metastore does
+#: with table schemas. Keyed on the applicationId so a
 #: fresh SparkContext never sees stale entries.
-_SCHEMA_MEMO: dict[tuple[str, str, str], object] = {}
+_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, key: str | None = None
+) -> DataFrame:
+    """Read ``paths`` in ONE scan, with the footer schema memoized under
+    ``(applicationId, abspath(key or paths[0]))``: the first read infers
+    it, later reads pass it back and launch no inference job."""
+    memo_key = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(key or paths[0]),
+    )
+    schema = _SCHEMA_MEMO.get(memo_key)
+    if schema is None:
+        df = spark.read.parquet(*paths)
+        _SCHEMA_MEMO[memo_key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def forget_schemas(base_dir: str) -> None:
+    """Drop every memoized schema keyed at or under ``base_dir`` (in any
+    application) — called before an index is rewritten, so its next read
+    infers the new footer."""
+    root = os.path.abspath(base_dir)
+    for memo_key in [
+        k
+        for k in _SCHEMA_MEMO
+        if k[1] == root or k[1].startswith(root + os.sep)
+    ]:
+        del _SCHEMA_MEMO[memo_key]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,27 +88,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     already carries exact physical types written by the generator) and
     assert congruence with the declared schema's column names — applying
     a HAND-DECLARED ``.schema(...)`` to parquet would disable vectorized
-    reading when nullability differs; the memoized re-read below passes
-    back the exact schema the footer read itself reported, so it is
-    congruent by construction. Name congruence is cheap and catches
-    drift.
+    reading when nullability differs; the memoized re-read in
+    ``read_parquet`` passes back the exact schema the footer read itself
+    reported, so it is congruent by construction. Name congruence is
+    cheap and catches drift.
     """
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-    )
     # Defensive runtime confs: the caller's session (e.g. the driver's)
     # may not carry our SCALE_PROFILE. Both are runtime-settable SQL
     # confs; UTC keeps timestamp↔epoch conversions aligned with DuckDB.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = _SCHEMA_MEMO.get(memo_key)
-    if raw_schema is None:
-        df = spark.read.parquet(table_path(sf_dir, name))
-        _SCHEMA_MEMO[memo_key] = df.schema
-    else:
-        df = spark.read.schema(raw_schema).parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     # TIMESTAMP(NANOS) columns surface as LongType nanos under
     # spark.sql.legacy.parquet.nanosAsLong; truncate to micros (exactly
     # what DuckDB's reader does) and restore TimestampType.

@@ -177,12 +177,12 @@ def _min_agg_signatures(
     which measures ~1.8× faster than n_hashes interpreted
     array_min(transform(...)) passes (higher-order functions are
     evaluated per-element outside codegen), and partial MIN aggregation
-    keeps the shuffle at one n_hashes-wide row per doc."""
+    keeps the shuffle at one n_hashes-wide row per doc. Each aggregate
+    is SQL text (int literals, as ``F.lit`` types them): one Py4J call
+    instead of a dozen per column tree."""
     return exploded.groupBy(id_col).agg(
         *[
-            F.min(F.pmod(F.col("x") * F.lit(a) + F.lit(b), F.lit(_M31P))).alias(
-                f"mh_{i}"
-            )
+            F.expr(f"min(pmod(x * {a} + {b}, {_M31P})) AS mh_{i}")
             for i, (a, b) in enumerate(_perm_params(n_hashes))
         ]
     )
@@ -190,22 +190,17 @@ def _min_agg_signatures(
 
 def _band_hashes_cols(bands: int, rows_per_band: int) -> Column:
     """Band-bucket array from ``mh_i`` signature COLUMNS (the
-    ``_min_agg_signatures`` layout)."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                F.concat_ws(
-                    "_",
-                    *[
-                        F.col(f"mh_{b * rows_per_band + r}").cast("string")
-                        for r in range(rows_per_band)
-                    ],
-                ),
-            )
-            for b in range(bands)
-        ]
+    ``_min_agg_signatures`` layout), as one SQL expression."""
+    hashes = ", ".join(
+        f"xxhash64({b}, concat_ws('_', "
+        + ", ".join(
+            f"CAST(mh_{b * rows_per_band + r} AS STRING)"
+            for r in range(rows_per_band)
+        )
+        + "))"
+        for b in range(bands)
     )
+    return F.expr(f"array({hashes})")
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -867,9 +862,12 @@ def minhash_index_build(
     form the append/probe/compact lifecycle below maintains. One corpus
     scan; both tables are narrow (3 longs per band per doc; one
     long-array row per doc)."""
+    from .. import catalog
+
     postings, shingles = minhash_index(
         docs, id_col, text_col, k, n_hashes, bands, shingle_fn
     )
+    catalog.forget_schemas(base_dir)
     postings.write.mode("overwrite").parquet(f"{base_dir}/postings")
     shingles.write.mode("overwrite").parquet(f"{base_dir}/shingles")
 

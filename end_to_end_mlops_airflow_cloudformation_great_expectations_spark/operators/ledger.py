@@ -1,7 +1,8 @@
 """Commit-ledger primitives for persisted, incrementally-maintained
-indexes (IVF: :mod:`.similarity`; MinHash: :mod:`.dedup`).
+indexes (MinHash: :mod:`.dedup`; BM25: :mod:`.textindex`; IVF,
+embedding-dedup and HNSW: :mod:`.similarity`).
 
-Both indexes share one maintenance protocol (the LSM-ish discipline a
+All of them share one maintenance protocol (the LSM-ish discipline a
 100 TB index needs — an object store gives you atomic rename and
 nothing else):
 
@@ -108,10 +109,12 @@ def write_folded_manifest(new_dir: str, ids) -> None:
 
 # ---------------------------------------------------------------------------
 # Generic multi-table delta index (the protocol instantiated by the
-# MinHash dedup index — operators/dedup.py — and the BM25 retrieval
-# index — operators/textindex.py; the IVF index in similarity.py
-# predates this factoring and keeps its own single-table layout with
-# identical semantics). Layout:
+# MinHash dedup index — operators/dedup.py — the BM25 retrieval index
+# — operators/textindex.py — and the embedding-dedup and HNSW indexes
+# in similarity.py). The IVF index in similarity.py commits through
+# the same primitives (read_ledger, committed_new, swap_forward) but
+# keeps its cell-partitioned ``postings_delta/b{id}`` layout: several
+# cell-partitioned roots cannot be read in one scan. Layout:
 #
 #   {base_dir}/{table}/            per-table base parquet
 #   {base_dir}/delta/b{id}/{table} per-batch delta, committed by a
@@ -123,14 +126,15 @@ def write_folded_manifest(new_dir: str, ids) -> None:
 
 
 def resolve_delta_tables(spark, base_dir: str, tables) -> dict:
-    """READ-ONLY snapshot resolution: each table as a lazy union of
-    base + committed, unfolded deltas. Never mutates the directory
-    (ADVICE r06: a reader racing a live compactor must not delete its
-    in-flight output): a committed-but-unswapped ``{table}_new``
-    already contains the folded deltas, so it is read AS the base;
-    ledger-folded delta dirs are skipped either way, so every appended
-    row is counted exactly once at any crash point."""
-    import os
+    """READ-ONLY snapshot resolution: each table as ONE scan of base +
+    committed, unfolded deltas, its footer schema memoized under
+    ``{base_dir}/{table}`` (``catalog.read_parquet``). Never mutates
+    the directory (ADVICE r06: a reader racing a live compactor must
+    not delete its in-flight output): a committed-but-unswapped
+    ``{table}_new`` already contains the folded deltas, so it is read
+    AS the base; ledger-folded delta dirs are skipped either way, so
+    every appended row is counted exactly once at any crash point."""
+    from .. import catalog
 
     folded = read_ledger(base_dir)
     delta_root = os.path.join(base_dir, "delta")
@@ -148,12 +152,12 @@ def resolve_delta_tables(spark, base_dir: str, tables) -> dict:
         new_dir = os.path.join(base_dir, f"{table}_new")
         if committed_new(base_dir, new_dir):
             base_path = new_dir
-        df = spark.read.parquet(base_path)
-        for d in live:
-            df = df.unionByName(
-                spark.read.parquet(os.path.join(delta_root, d, table))
-            )
-        out[table] = df
+        out[table] = catalog.read_parquet(
+            spark,
+            base_path,
+            *[os.path.join(delta_root, d, table) for d in live],
+            key=os.path.join(base_dir, table),
+        )
     return out
 
 
@@ -231,8 +235,9 @@ def compact_delta_index(spark, base_dir: str, tables) -> None:
     recoverable at every step via recover_delta_index; ledger entries
     tombstone folded batch ids so re-delivered appends cannot
     double-insert."""
-    import os
     import shutil
+
+    from .. import catalog
 
     recover_delta_index(base_dir, tables)
     delta_root = os.path.join(base_dir, "delta")
@@ -253,11 +258,12 @@ def compact_delta_index(spark, base_dir: str, tables) -> None:
             shutil.rmtree(delta_root, ignore_errors=True)
         return
     for table in tables:
-        df = spark.read.parquet(os.path.join(base_dir, table))
-        for d in folded:
-            df = df.unionByName(
-                spark.read.parquet(os.path.join(delta_root, d, table))
-            )
+        df = catalog.read_parquet(
+            spark,
+            os.path.join(base_dir, table),
+            *[os.path.join(delta_root, d, table) for d in folded],
+            key=os.path.join(base_dir, table),
+        )
         new_dir = os.path.join(base_dir, f"{table}_new")
         df.write.mode("overwrite").parquet(new_dir)
         write_folded_manifest(new_dir, folded)

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import dot
+
 #: Tracked lazy caches (the operators/dedup.py convention): persist()
 #: runs no job; the next operator call evicts the previous call's
 #: caches so a long-lived session holds one live cache set.
@@ -155,14 +157,9 @@ def power_iteration(G: DataFrame, rounds: int, init: float = 0.125) -> DataFrame
     vrow = rows.agg(
         F.transform(F.sequence(F.lit(1), dim), lambda _: F.lit(init)).alias("varr")
     )
-    dot = lambda grow, varr: F.aggregate(  # noqa: E731
-        F.zip_with(grow, varr, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     for _ in range(rounds):
         scored = rows.crossJoin(F.broadcast(vrow)).select(
-            "i", dot(F.col("grow"), F.col("varr")).alias("w")
+            "i", dot("grow", "varr").alias("w")
         )
         vrow = scored.agg(
             F.array_sort(F.collect_list(F.struct("i", "w"))).alias("pairs"),
@@ -287,14 +284,9 @@ def power_iteration_by(
             F.sequence(F.lit(1), F.size(F.first("grow"))), lambda _: F.lit(init)
         ).alias("varr")
     )
-    dot = lambda grow, varr: F.aggregate(  # noqa: E731
-        F.zip_with(grow, varr, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     for _ in range(rounds):
         scored = rows.join(F.broadcast(vrow), key_col).select(
-            key_col, "i", dot(F.col("grow"), F.col("varr")).alias("w")
+            key_col, "i", dot("grow", "varr").alias("w")
         )
         vrow = scored.groupBy(key_col).agg(
             F.array_sort(F.collect_list(F.struct("i", "w"))).alias("pairs"),

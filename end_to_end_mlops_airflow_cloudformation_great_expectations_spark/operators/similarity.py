@@ -38,23 +38,36 @@ def _persist_tracked(df: DataFrame) -> DataFrame:
     return df
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+# The vector helpers take array column NAMES and return one SQL
+# expression: one Py4J call, where each Python-lambda higher-order
+# function costs dozens of round trips.
+def _dot_sql(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with(`{a}`, `{b}`, (x, y) -> x * y),"
+        " 0D, (acc, x) -> acc + x)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
+def _norm_sql(a: str) -> str:
+    return (
+        f"sqrt(aggregate(transform(`{a}`, x -> x * x),"
+        " 0D, (acc, x) -> acc + x))"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
+def dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
+
+
+def norm(a: str) -> Column:
+    return F.expr(_norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
     # try_divide: zero vectors yield NULL similarity, not an ANSI error
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
+    return F.expr(
+        f"try_divide({_dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
+    )
 
 
 def _as_double(c: Column) -> Column:
@@ -88,7 +101,7 @@ def brute_force_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+            F.round(cosine("qv", "cv"), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -205,7 +218,7 @@ def lsh_topk(
     scored = cands.select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+        F.round(cosine("qv", "cv"), 6).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("neighbor_id"))
     return (
@@ -441,38 +454,16 @@ def ivf_index_build(
     # file count tracks the partition count and each file is
     # cell-pure, which is what the probe's partition pruning reads.
     par = corpus.sparkSession.sparkContext.defaultParallelism
+    from .. import catalog
+
+    catalog.forget_schemas(base_dir)
     assigned.repartition(par, "cell").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(f"{base_dir}/postings")
-    from .. import catalog
-
     cent = [(i, [float(x) for x in C[i]]) for i in range(len(C))]
     catalog.local_df(
         corpus.sparkSession, cent, "cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{base_dir}/centroids")
-
-
-def _read_compaction_ledger(base_dir: str) -> set:
-    """Batch ids already folded into the base postings by
-    ivf_index_compact — see :mod:`.ledger` for the shared protocol
-    (the ledger is the compaction COMMIT MANIFEST and the append
-    tombstone set; readers skip folded delta dirs even if a crash left
-    them on disk, preventing the double-count ADVICE r05 flagged)."""
-    from . import ledger
-
-    return ledger.read_ledger(base_dir)
-
-
-def _committed_postings_new(base_dir: str) -> bool:
-    """True iff ``postings_new`` exists and its compaction COMMITTED
-    (:func:`.ledger.committed_new`). Shared by the compactor's
-    destructive recovery and the search path's read-only snapshot
-    resolution."""
-    import os
-
-    from . import ledger
-
-    return ledger.committed_new(base_dir, os.path.join(base_dir, "postings_new"))
 
 
 def _recover_compaction(base_dir: str) -> None:
@@ -496,21 +487,14 @@ def _recover_compaction(base_dir: str) -> None:
     import os
     import shutil
 
+    from . import ledger
+
     new_dir = os.path.join(base_dir, "postings_new")
-    old_dir = os.path.join(base_dir, "postings")
-    aside = os.path.join(base_dir, "postings_old")
-    if os.path.isdir(new_dir):
-        if _committed_postings_new(base_dir):
-            if os.path.isdir(old_dir):
-                if os.path.isdir(aside):
-                    shutil.rmtree(aside)
-                os.rename(old_dir, aside)
-            os.rename(new_dir, old_dir)
-        else:  # pre-commit crash — old state authoritative
-            shutil.rmtree(new_dir, ignore_errors=True)
-    if os.path.isdir(aside) and os.path.isdir(old_dir):
-        shutil.rmtree(aside, ignore_errors=True)
-    folded = _read_compaction_ledger(base_dir)
+    if os.path.isdir(new_dir) and not ledger.committed_new(base_dir, new_dir):
+        # pre-commit crash — old state authoritative
+        shutil.rmtree(new_dir, ignore_errors=True)
+    ledger.swap_forward(base_dir, "postings")
+    folded = ledger.read_ledger(base_dir)
     delta_root = os.path.join(base_dir, "postings_delta")
     if os.path.isdir(delta_root):
         # remove ONLY ledger-listed (folded) dirs; unmarked dirs with no
@@ -542,8 +526,11 @@ def ivf_index_search(
     index relocation changes WHERE the work happens, not the answer."""
     import os
 
+    from .. import catalog
+    from . import ledger
+
     spark = queries.sparkSession
-    cent_df = spark.read.parquet(f"{base_dir}/centroids")
+    cent_df = catalog.read_parquet(spark, f"{base_dir}/centroids")
     # READ-ONLY snapshot resolution (ADVICE r06): the search path never
     # mutates the index directory — destructive crash recovery belongs
     # to ivf_index_compact, the single writer. A committed-but-unswapped
@@ -552,19 +539,23 @@ def ivf_index_search(
     # read IT as the base; otherwise read the current base. Either way
     # ledger-folded delta dirs are skipped below, so every appended row
     # is counted exactly once at any crash point — without deleting
-    # anything out from under an in-flight compactor.
-    base_path = f"{base_dir}/postings"
-    if _committed_postings_new(base_dir):
+    # anything out from under an in-flight compactor. Every root is read
+    # with the footer schema memoized under ``{base_dir}/postings``.
+    key = os.path.join(base_dir, "postings")
+    base_path = key
+    if ledger.committed_new(base_dir, f"{base_dir}/postings_new"):
         base_path = f"{base_dir}/postings_new"
-    postings = spark.read.parquet(base_path)
+    postings = catalog.read_parquet(spark, base_path, key=key)
     # streaming deltas (ivf_index_append): each b{batch_id} directory
     # is its own cell-partitioned layout — union them in, so a search
     # always sees base + every appended batch without any rebuild.
     # Delta ids in the compaction ledger are already folded into the
     # base and partial deltas (no _SUCCESS) are aborted writes the
-    # append sink will redo — skip both.
+    # append sink will redo — skip both. One scan of several
+    # cell-partitioned roots fails (CONFLICTING_DIRECTORY_STRUCTURES),
+    # so each root is its own read.
     delta_root = f"{base_dir}/postings_delta"
-    folded = _read_compaction_ledger(base_dir)
+    folded = ledger.read_ledger(base_dir)
     if os.path.isdir(delta_root):
         for d in sorted(os.listdir(delta_root)):
             if d in folded or not os.path.exists(
@@ -572,7 +563,9 @@ def ivf_index_search(
             ):
                 continue
             postings = postings.unionByName(
-                spark.read.parquet(os.path.join(delta_root, d))
+                catalog.read_parquet(
+                    spark, os.path.join(delta_root, d), key=key
+                )
             )
     q = queries.select(
         F.col(query_id).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
@@ -581,7 +574,7 @@ def ivf_index_search(
         "query_id",
         "qv",
         "cell",
-        cosine(F.col("qv"), F.col("centroid")).alias("c_sim"),
+        cosine("qv", "centroid").alias("c_sim"),
     )
     wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.col("cell"))
     probes = (
@@ -595,7 +588,7 @@ def ivf_index_search(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+            F.round(cosine("qv", "cv"), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -623,10 +616,12 @@ def ivf_index_append(base_dir: str):
     an offline rewrite of the same table (sources/io compaction
     pattern)."""
     import os
+    import shutil
 
     import numpy as np
 
-    import shutil
+    from .. import catalog
+    from . import ledger
 
     # per-stream centroid cache: the stored centroids are immutable for
     # an index lifetime (append never retrains), so one bounded
@@ -645,17 +640,16 @@ def ivf_index_append(base_dir: str):
             if os.path.exists(os.path.join(delta, "_SUCCESS")):
                 return
             shutil.rmtree(delta, ignore_errors=True)
-        if f"b{batch_id}" in _read_compaction_ledger(base_dir):
+        if f"b{batch_id}" in ledger.read_ledger(base_dir):
             return  # folded into base by ivf_index_compact
-        spark = batch_df.sparkSession
         if "C" not in cache:
-            cent = (
-                spark.read.parquet(f"{base_dir}/centroids")
-                .orderBy("cell")
-                .collect()
-            )
+            # n_centroids rows: sorted here, not by a Spark sort's jobs
+            cent = catalog.read_parquet(
+                batch_df.sparkSession, f"{base_dir}/centroids"
+            ).collect()
             cache["C"] = np.array(
-                [r["centroid"] for r in cent], dtype="float64"
+                [r["centroid"] for r in sorted(cent, key=lambda r: r["cell"])],
+                dtype="float64",
             )
         assigned = batch_df.withColumn(
             "cell", _cell_assign_udf(cache["C"])(F.col("cv"))
@@ -678,6 +672,7 @@ def ivf_index_compact(spark, base_dir: str) -> None:
     import os
     import shutil
 
+    from .. import catalog
     from . import ledger
 
     # start from a consistent layout (a prior compact may have crashed
@@ -686,7 +681,7 @@ def ivf_index_compact(spark, base_dir: str) -> None:
     delta_root = os.path.join(base_dir, "postings_delta")
     if not os.path.isdir(delta_root):
         return
-    already = _read_compaction_ledger(base_dir)
+    already = ledger.read_ledger(base_dir)
     folded = [
         d
         for d in sorted(os.listdir(delta_root))
@@ -704,10 +699,11 @@ def ivf_index_compact(spark, base_dir: str) -> None:
         if not os.listdir(delta_root):
             shutil.rmtree(delta_root, ignore_errors=True)
         return
-    postings = spark.read.parquet(os.path.join(base_dir, "postings"))
+    key = os.path.join(base_dir, "postings")
+    postings = catalog.read_parquet(spark, key, key=key)
     for d in folded:
         postings = postings.unionByName(
-            spark.read.parquet(os.path.join(delta_root, d))
+            catalog.read_parquet(spark, os.path.join(delta_root, d), key=key)
         )
     new_dir = os.path.join(base_dir, "postings_new")
     postings.write.mode("overwrite").partitionBy("cell").parquet(new_dir)
@@ -729,11 +725,7 @@ def ivf_index_compact(spark, base_dir: str) -> None:
     # swap keeps a recoverable state at every step: old base is moved
     # aside BEFORE the new one takes its place, never deleted first;
     # _recover_compaction finishes this sequence from any crash point.
-    old_dir = os.path.join(base_dir, "postings")
-    aside = os.path.join(base_dir, "postings_old")
-    os.rename(old_dir, aside)
-    os.rename(new_dir, old_dir)
-    shutil.rmtree(aside)
+    ledger.swap_forward(base_dir, "postings")
     for d in folded:
         shutil.rmtree(os.path.join(delta_root, d), ignore_errors=True)
     if not os.listdir(delta_root):
@@ -796,7 +788,7 @@ def ivf_topk(
             "query_id",
             "qv",
             "cell",
-            cosine(F.col("qv"), F.col("centroid")).alias("c_sim"),
+            cosine("qv", "centroid").alias("c_sim"),
         )
     )
     wc = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.col("cell"))
@@ -811,7 +803,7 @@ def ivf_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+            F.round(cosine("qv", "cv"), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.col("neighbor_id"))
@@ -1062,7 +1054,7 @@ def cosine_neardup_pairs(
             "block",
             "id_a",
             "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
+            F.round(cosine("va", "vb"), 6).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -1200,7 +1192,7 @@ def pq_topk(
         F.col(query_id).alias("query_id"),
         _as_double(F.col(vec_col)).alias("qv"),
     ).withColumn("lut", _pq_lut_udf(books)(F.col("qv")))
-    q = q.withColumn("qnorm", norm(F.col("qv")))
+    q = q.withColumn("qnorm", norm("qv"))
 
     # ADC scan: broadcast the (tiny) query+LUT table against the code
     # table; Σ_j LUT[j*n_codes + codes_j] via a bounded m-element fold
@@ -1238,7 +1230,7 @@ def pq_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+            F.round(cosine("qv", "cv"), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1368,7 +1360,7 @@ def ivfpq_topk(
             _as_double(F.col(vec_col)).alias("qv"),
         )
         .withColumn("lut", lut_udf(F.col("qv")))
-        .withColumn("qnorm", norm(F.col("qv")))
+        .withColumn("qnorm", norm("qv"))
     )
     from .. import catalog
 
@@ -1383,7 +1375,7 @@ def ivfpq_topk(
         "lut",
         "qnorm",
         "cell",
-        dot(F.col("qv"), F.col("centroid")).alias("qc_dot"),
+        dot("qv", "centroid").alias("qc_dot"),
     )
     wc = Window.partitionBy("query_id").orderBy(
         F.desc("qc_dot"), F.col("cell")
@@ -1430,7 +1422,7 @@ def ivfpq_topk(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+            F.round(cosine("qv", "cv"), 6).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1539,9 +1531,12 @@ def embdedup_index_build(
     miss every bucket — the index is self-describing instead)."""
     import json
 
+    from .. import catalog
+
     t = _embdedup_tables(
         embeddings, n_planes, n_tables, seed, id_col, vec_col
     )
+    catalog.forget_schemas(base_dir)
     t["buckets"].write.mode("overwrite").parquet(f"{base_dir}/buckets")
     t["vectors"].write.mode("overwrite").parquet(f"{base_dir}/vectors")
     with open(_embdedup_params_path(base_dir), "w") as fh:
@@ -1627,7 +1622,7 @@ def embdedup_index_probe(
         .select(
             "new_id",
             "corpus_id",
-            F.round(cosine(F.col("v_new"), F.col("v_corpus")), 6).alias(
+            F.round(cosine("v_new", "v_corpus"), 6).alias(
                 "cos_sim"
             ),
         )
@@ -1869,7 +1864,7 @@ def graph_greedy_search(
         F.col(corpus_id).alias("nid"), _as_double(F.col(corpus_vec)).alias("cv")
     )
     e_struct = F.struct(
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
+        F.round(cosine("qv", "cv"), 6).alias("cos"),
         (-F.col("nid")).cast("long").alias("mnode"),
     )
     if entry_points is None:
@@ -1982,12 +1977,15 @@ def hnsw_index_build(
     import json
     import os
 
+    from .. import catalog
+
     edges = neighbor_graph_build(
         embeddings, m, n_planes, n_tables, id_col, vec_col, seed
     )
     vectors = embeddings.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     )
+    catalog.forget_schemas(base_dir)
     edges.write.mode("overwrite").parquet(os.path.join(base_dir, "edges"))
     vectors.write.mode("overwrite").parquet(os.path.join(base_dir, "vectors"))
     with open(_hnsw_params_path(base_dir), "w") as fh:

@@ -69,7 +69,10 @@ def bm25_index_build(
     (the cost a per-query scan pays EVERY time), written term-clustered
     so query-time term filters prune row-groups via parquet min/max
     stats instead of reading the whole posting file."""
+    from .. import catalog
+
     t = _bm25_tables(docs, id_col, text_col)
+    catalog.forget_schemas(base_dir)
     t["postings"].repartition(n_files, "term").sortWithinPartitions(
         "term"
     ).write.mode("overwrite").parquet(f"{base_dir}/postings")

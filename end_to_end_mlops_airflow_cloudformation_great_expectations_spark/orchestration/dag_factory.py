@@ -105,6 +105,7 @@ def trips_pipeline_spec(
     def featurize_split_write(spark, conf):
         from pyspark.sql import functions as F
 
+        from .. import catalog
         from ..functions.columns import frac_hour, weekday_name
         from ..operators.encode import hash_split_col
         from ..operators.geo import haversine_km
@@ -131,6 +132,7 @@ def trips_pipeline_spec(
         )
         # ONE job writes every vendor × split partition (vs the
         # reference's serial per-vendor pandas writes)
+        catalog.forget_schemas(conf["output_path"])
         feats.write.mode("overwrite").partitionBy("vendor", "split").parquet(
             conf["output_path"]
         )
@@ -138,9 +140,14 @@ def trips_pipeline_spec(
 
     def check_vendor(vendor: str):
         def _check(spark, conf):
+            from .. import catalog
             from ..operators.expectations import Suite
 
-            part = spark.read.parquet(conf["output_path"]).where(
+            # the package wrote output_path itself: the vendor checks
+            # share one footer-schema inference (the raw input reads
+            # above keep inferring — the gate must see the batch's
+            # real schema)
+            part = catalog.read_parquet(spark, conf["output_path"]).where(
                 f"vendor = '{vendor}'"
             )
             return Suite(f"vendor_{vendor}").expect_row_count_between(0).validate(

@@ -1608,7 +1608,7 @@ def sim_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_id",
             "alabel",
             "clabel",
-            F.round(cosine(F.col("av"), F.col("cv")), 6).alias("sim"),
+            F.round(cosine("av", "cv"), 6).alias("sim"),
         )
     )
     w = Window.partitionBy("anchor_id").orderBy(F.desc("sim"), F.col("cand_id"))

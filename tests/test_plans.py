@@ -753,10 +753,10 @@ _BUILD_TRIP_CEILINGS = {
 }
 
 
-def _build_trips(spark, name: str) -> int:
-    """Py4J commands sent while ``QUERIES[name]`` builds, excluding
-    py4j's ``m\\nd\\n`` garbage-collection deletes (they fire at
-    arbitrary times)."""
+def _build_trips(spark, build) -> int:
+    """Py4J commands sent while ``build()`` runs, excluding py4j's
+    ``m\\nd\\n`` garbage-collection deletes (they fire at arbitrary
+    times)."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     sent = 0
@@ -769,7 +769,7 @@ def _build_trips(spark, name: str) -> int:
 
     client.send_command = counting
     try:
-        QUERIES[name](spark, SF_DIR)
+        build()
     finally:
         del client.send_command
     return sent
@@ -790,12 +790,150 @@ def test_plan_build_round_trips_are_pinned(spark):
         debugging = pyspark_errors.is_debugging_enabled()
         for name in _BUILD_TRIP_CEILINGS:
             QUERIES[name](spark, SF_DIR)  # warm the catalog memo
-        trips = {n: _build_trips(spark, n) for n in _BUILD_TRIP_CEILINGS}
+        trips = {
+            n: _build_trips(spark, lambda n=n: QUERIES[n](spark, SF_DIR))
+            for n in _BUILD_TRIP_CEILINGS
+        }
     finally:
         pyspark_errors._enable_debugging_cache = cached
     assert debugging is False
     over = {n: c for n, c in trips.items() if c > _BUILD_TRIP_CEILINGS[n]}
     assert not over, (over, trips)
+
+
+def _build_jobs(spark, build, group: str) -> int:
+    """Spark jobs launched while ``build()`` runs (a job group and the
+    status tracker)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
+@pytest.fixture(scope="module")
+def hot_indexes(spark, tmp_path_factory):
+    """A persisted MinHash and IVF index, each base + one committed
+    delta, and the probe / search builders over them."""
+    from pyspark.sql import functions as F
+
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
+        catalog,
+    )
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
+        dedup,
+        similarity,
+    )
+
+    root = tmp_path_factory.mktemp("hot_indexes")
+    mh, ivf = str(root / "minhash"), str(root / "ivf")
+    docs = catalog.load(spark, SF_DIR, "documents")
+    vecs = catalog.load(spark, SF_DIR, "embeddings")
+    dedup.minhash_index_build(docs.filter(F.col("doc_id") < 300), mh)
+    dedup.minhash_index_append(mh)(docs.filter(F.col("doc_id").between(300, 349)), 0)
+    similarity.ivf_index_build(
+        vecs.filter(F.col("vec_id") < 400), ivf, n_centroids=8, max_iter=4
+    )
+    similarity.ivf_index_append(ivf)(
+        vecs.filter(F.col("vec_id") >= 400).select(
+            F.col("vec_id").alias("neighbor_id"),
+            similarity._as_double(F.col("embedding")).alias("cv"),
+        ),
+        0,
+    )
+    builders = {
+        "minhash_index_probe": lambda: dedup.minhash_index_probe(
+            catalog.load(spark, SF_DIR, "documents").filter(
+                F.col("doc_id") >= 400
+            ),
+            mh,
+        ),
+        "ivf_index_search": lambda: similarity.ivf_index_search(
+            catalog.load(spark, SF_DIR, "embeddings").filter(
+                F.col("vec_id") < 20
+            ),
+            ivf,
+            k=5,
+            n_probe=4,
+        ),
+    }
+    for build in builders.values():
+        assert build().collect()  # the first read memoizes the schemas
+    return builders
+
+
+def test_index_probe_and_search_builds_launch_no_jobs(spark, hot_indexes):
+    """Once an index has been read, building a probe or a search plan
+    over base + delta runs no footer-schema inference job: every index
+    table is read through catalog.read_parquet's memo."""
+    jobs = {
+        name: _build_jobs(spark, build, f"hot-build-{name}")
+        for name, build in hot_indexes.items()
+    }
+    assert jobs == {"minhash_index_probe": 0, "ivf_index_search": 0}
+
+
+#: Py4J commands one probe / search build may send over base + one
+#: delta (sf0.001, local[8]): now 478 / 236. The MinHash signature and
+#: band-hash expressions and the vector helpers are SQL text; built as
+#: Python column trees they cost 1,378 / 584.
+_INDEX_TRIP_CEILINGS = {"minhash_index_probe": 700, "ivf_index_search": 350}
+
+
+def test_index_probe_and_search_round_trips_are_pinned(spark, hot_indexes):
+    trips = {
+        name: _build_trips(spark, build) for name, build in hot_indexes.items()
+    }
+    over = {n: c for n, c in trips.items() if c > _INDEX_TRIP_CEILINGS[n]}
+    assert not over, (over, trips)
+
+
+def test_index_rebuild_forgets_memoized_schema(spark, tmp_path):
+    """A rebuild at the same base_dir with a new column type is read
+    with the new type: *_index_build drops the memoized schemas."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
+        catalog,
+    )
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
+        dedup,
+    )
+
+    base = str(tmp_path / "minhash")
+    docs = catalog.load(spark, SF_DIR, "documents").filter(F.col("doc_id") < 100)
+    dedup.minhash_index_build(docs, base)
+    postings, _ = dedup._minhash_resolve(spark, base)
+    assert postings.schema["id"].dataType == T.LongType()
+    dedup.minhash_index_build(
+        docs.withColumn("doc_id", F.col("doc_id").cast("int")), base
+    )
+    postings, shingles = dedup._minhash_resolve(spark, base)
+    assert postings.schema["id"].dataType == T.IntegerType()
+    assert shingles.schema["id"].dataType == T.IntegerType()
+    assert postings.count() > 0
+
+
+def test_ewma_user_grouped_stage_keeps_full_width(spark):
+    """a_ewma_user's grouped map runs per-group Python work: its keyed
+    repartition (operators/udfs.grouped_ewma) keeps the grouped stage
+    at least defaultParallelism tasks wide, where AQE's byte-based
+    coalescing would squeeze it onto one or two."""
+    sc = spark.sparkContext
+    df = QUERIES["a_ewma_user"](spark, SF_DIR)
+    sc.setJobGroup("ewma-width", "a_ewma_user")
+    try:
+        df.collect()
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup("ewma-width"))
+    # the result stage is created after its parents: the largest id
+    grouped = tracker.getStageInfo(max(tracker.getJobInfo(last_job).stageIds))
+    assert grouped.numTasks >= sc.defaultParallelism, grouped
 
 
 @pytest.mark.parametrize(
