@@ -253,10 +253,6 @@ def bounded_parts(
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in schemas.TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every canonical table as a temp view (for spark.sql paths)."""
     for name in schemas.TABLES:

@@ -49,21 +49,6 @@ def weekday_name(ts: Column) -> Column:
     return F.date_format(ts, "EEEE")
 
 
-def epoch_seconds(ts: Column) -> Column:
-    """Timestamp → epoch seconds as BIGINT (oracle-stable way to put
-    timestamps into hashed outputs)."""
-    return F.unix_timestamp(ts)
-
-
-def window_start_epoch(ts: Column, width_seconds: int) -> Column:
-    """Tumbling-window start as epoch seconds (what ``F.window(...).start``
-    computes, in portable arithmetic)."""
-    return (
-        F.floor(F.unix_timestamp(ts) / width_seconds).cast("long")
-        * width_seconds
-    )
-
-
 def tree_sum(cols: list[Column]) -> Column:
     """Sum many columns with a BALANCED expression tree.
 

@@ -20,7 +20,7 @@ same shingle→minhash→band pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 #: Caches created by the most recent minhash_neardup_pairs call. The
@@ -210,53 +210,6 @@ def jaccard(a: Column, b: Column) -> Column:
     return inter / union
 
 
-def minhash_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    n_hashes: int = 32,
-    bands: int = 8,
-    max_bucket_size: int = 1000,
-    shingle_fn=None,
-) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b): docs sharing ≥1 minhash band.
-
-    bands=8 × rows=4 ⇒ S-curve threshold (1/8)^(1/4) ≈ 0.59 Jaccard.
-
-    ``shingle_fn`` picks the shingle representation: char k-shingles
-    (default — robust to tokenization) or ``word_ngrams`` (standard for
-    word-level corpora: far fewer shingles per doc and much lower
-    cross-doc background similarity, so candidate sets stay small —
-    char-5 shingles on a small-vocabulary corpus measured ~100× the
-    candidate pairs of word 3-grams).
-    """
-    rows_per_band = n_hashes // bands
-    sigs = minhash_signatures(docs, id_col, text_col, k, n_hashes, shingle_fn)
-    buckets = sigs.select(
-        id_col,
-        F.posexplode(_band_hashes_cols(bands, rows_per_band)).alias(
-            "band", "bucket"
-        ),
-    )
-    # skew guard: drop boilerplate mega-buckets before the self-join
-    sized = buckets.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "bucket"))
-    ).filter(F.col("bucket_n") <= max_bucket_size)
-    a = sized.select(
-        F.col("band"), F.col("bucket"), F.col(id_col).alias("id_a")
-    )
-    b = sized.select(
-        F.col("band"), F.col("bucket"), F.col(id_col).alias("id_b")
-    )
-    return (
-        a.join(b, on=["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_neardup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -416,7 +369,8 @@ def connected_components(
     overwhelmingly tiny cliques/chains, so 2-3 rounds typical. All
     DataFrame ops (edges are shuffled on node id; labels are the only
     state), ``localCheckpoint`` per round truncates the otherwise
-    exponentially growing lineage. Raises if ``max_iter`` rounds don't
+    exponentially growing lineage, and the round's changed-label count
+    is observed on that same job. Raises if ``max_iter`` rounds don't
     converge rather than returning a half-merged labeling.
     """
     # undirected: keep both orientations so labels flow both ways.
@@ -465,7 +419,10 @@ def connected_components(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        new_labels = (
+        # The convergence count rides the checkpoint's job as an
+        # Observation: one job per round, not a second action.
+        obs = Observation()
+        labels = (
             labels.join(neighbor_min, "id", "left")
             .select(
                 "id",
@@ -474,10 +431,11 @@ def connected_components(
                 ).alias("component"),
                 (F.col("nbr_min") < F.col("component")).alias("__chg"),
             )
-        ).localCheckpoint()  # eager: truncate lineage + one job per round
-        changed = new_labels.filter(F.col("__chg")).limit(1).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
+            .observe(obs, F.count_if("__chg").alias("changed"))
+            .localCheckpoint(eager=True)
+            .drop("__chg")
+        )
+        if obs.get["changed"] == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds — "
@@ -941,14 +899,6 @@ def minhash_index_probe(
         shingle_fn,
         max_bucket_size,
     )
-
-
-def _minhash_recover(base_dir: str) -> None:
-    """Writer-only destructive recovery
-    (:func:`.ledger.recover_delta_index` over both subtables)."""
-    from . import ledger
-
-    ledger.recover_delta_index(base_dir, _MINHASH_TABLES)
 
 
 def minhash_index_compact(spark, base_dir: str) -> None:

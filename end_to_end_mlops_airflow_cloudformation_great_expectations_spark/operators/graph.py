@@ -4,15 +4,34 @@ dedup.connected_components for the min-label-propagation dedup path).
 PageRank here is the bounded-iteration DataFrame formulation: each
 round is one shuffle join (edges ⋈ ranks on src) plus one aggregation
 (contributions by dst) — the classic Pregel message pattern expressed
-relationally so Catalyst/AQE handle partitioning and skew. Lineage is
-truncated per iteration (persist + unpersist previous) so 10 rounds
-don't build a 10-deep join plan.
+relationally so Catalyst/AQE handle partitioning and skew. The eager
+fixpoints (pagerank, personalized_pagerank, kcore_bounded) cut their
+lineage with an eager ``localCheckpoint`` every ``_TRUNCATE_EVERY``
+rounds and at the last round (:func:`_truncate`); the lazy ones
+(label_propagation, bfs_distances, sssp_bounded) reference their
+iterate once per round, so their plans grow linearly and need no cut.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+#: Rounds between eager lineage cuts. Each eager-fixpoint round embeds
+#: the previous round's plan about 3x, so the analyzed tree grows 3^r
+#: between cuts: every 3 rounds keeps it at ~27 copies while running a
+#: third of the materialization jobs of a per-round cut.
+_TRUNCATE_EVERY = 3
+
+
+def _truncate(df: DataFrame, it: int, rounds: int) -> DataFrame:
+    """``df`` after round ``it`` (0-based) of ``rounds``: eagerly
+    checkpointed every ``_TRUNCATE_EVERY`` rounds and at the last
+    round, otherwise unchanged. Truncation never changes the
+    arithmetic, only where the plan is cut."""
+    if (it + 1) % _TRUNCATE_EVERY == 0 or it == rounds - 1:
+        return df.localCheckpoint(eager=True)
+    return df
 
 
 def pagerank(
@@ -21,7 +40,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Bounded-iteration PageRank over an edge list.
 
@@ -29,8 +47,9 @@ def pagerank(
     with no outlinks leak their mass, as in the original formulation);
     rank sums to 1 on graphs where every vertex has an outlink.
     Inherently iterative ⇒ eager at call time (the documented
-    lazy-build exception — see the repo build notes); vertex count is
-    one scalar agg, not a full collect.
+    lazy-build exception — see the repo build notes); the vertex count
+    is an ``Observation`` filled by the vertex checkpoint's own job,
+    not a second action. Raises ``ValueError`` on an empty edge list.
 
     Lineage MUST be truncated with ``localCheckpoint``: ``persist``
     alone reuses the physical data but keeps nesting the LOGICAL plan
@@ -38,25 +57,24 @@ def pagerank(
     rounds the analyzer itself OOMs on the 3^k-node tree — measured in
     this repo's tests, and the same blowup the perf notes document for
     expression re-inlining. Truncating every round is overkill though:
-    each eager checkpoint is a full materialization job, and the tree
-    only grows 3^checkpoint_every between truncations — every 3 rounds
-    keeps the analyzer at ≤27-node trees while cutting the
-    materialization jobs 3× (measured 2.52 s → 1.91 s for 5 rounds at
-    sf0.1, ranks bit-identical since truncation frequency never
-    changes the arithmetic). On a cluster, swap localCheckpoint for a
-    reliable ``checkpoint`` dir so executor loss can't drop rank state.
+    each eager checkpoint is a full materialization job, so the cut
+    runs every ``_TRUNCATE_EVERY`` rounds (:func:`_truncate`; measured
+    2.52 s → 1.91 s for 5 rounds at sf0.1 against a per-round cut,
+    ranks bit-identical since truncation frequency never changes the
+    arithmetic). On a cluster, swap localCheckpoint for a reliable
+    ``checkpoint`` dir so executor loss can't drop rank state.
     """
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
+    n_obs = Observation()
     verts = (
         edges.select(F.col(src).alias("vid"))
         .union(edges.select(F.col(dst).alias("vid")))
         .distinct()
+        .observe(n_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    n = verts.count()
+    n = n_obs.get["n"]
+    if n == 0:
+        raise ValueError("pagerank needs at least one edge")
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
     deg = e.groupBy("e_src").agg(F.count("*").alias("deg"))
     ranks = verts.select(
@@ -83,8 +101,7 @@ def pagerank(
                 + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
             ).alias("rank"),
         )
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _truncate(ranks, it, iterations)
     return ranks
 
 
@@ -329,7 +346,6 @@ def kcore_bounded(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Bounded-round k-core peeling over a SYMMETRIC edge list (pass
     both directions, so per-source counts are full degrees): each
@@ -349,8 +365,8 @@ def kcore_bounded(
     Iterative ⇒ eager at call time (the documented lazy-build
     exception). Each round references the edge iterate three times
     (degree + two semi-joins), so lineage grows 3^r between
-    truncations — ``localCheckpoint`` every ``checkpoint_every``
-    rounds caps the analyzer tree (the pagerank discipline; swap for
+    truncations — :func:`_truncate` cuts it every ``_TRUNCATE_EVERY``
+    rounds and at the last (the pagerank discipline; swap for
     reliable ``checkpoint`` on a cluster). Per round: one groupBy
     shuffle + two LEFT SEMI joins on the survivor set, which AQE
     turns into broadcasts once peeling shrinks it."""
@@ -371,8 +387,7 @@ def kcore_bounded(
         e = e.join(sur, "s", "left_semi").join(
             sur.withColumnRenamed("s", "d"), "d", "left_semi"
         )
-        if (it + 1) % checkpoint_every == 0 or it == rounds - 1:
-            e = e.localCheckpoint(eager=True)
+        e = _truncate(e, it, rounds)
     return e.groupBy("s").agg(F.count("*").alias("deg")).select(
         F.col("s").alias("id"), F.col("deg").cast("long").alias("deg")
     )
@@ -386,7 +401,6 @@ def personalized_pagerank(
     src: str = "src",
     dst: str = "dst",
     seed_id: str = "vid",
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Personalized PageRank: identical recurrence to :func:`pagerank`
     except the teleport mass lands ONLY on the seed set (uniformly),
@@ -396,15 +410,12 @@ def personalized_pagerank(
     the teleport vector itself (1/|S| on seeds), the standard PPR
     start.
 
-    Same eager-fixpoint contract as pagerank (|S| and |V| are scalar
-    counts, not collects; lineage localCheckpoint-truncated every
-    ``checkpoint_every`` rounds), same per-round cost: one edges ⋈
-    ranks shuffle + one partial-agg SUM by destination. Dangling
-    vertices leak mass exactly as in the simplified pagerank."""
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
+    Same eager-fixpoint contract as pagerank (|S| is a scalar count,
+    not a collect, taken before any checkpoint exists because the init
+    expression needs it; lineage cut by :func:`_truncate`), same
+    per-round cost: one edges ⋈ ranks shuffle + one partial-agg SUM by
+    destination. Dangling vertices leak mass exactly as in the
+    simplified pagerank. Raises ``ValueError`` on an empty seed set."""
     verts = (
         edges.select(F.col(src).alias("vid"))
         .union(edges.select(F.col(dst).alias("vid")))
@@ -415,6 +426,8 @@ def personalized_pagerank(
         "is_seed", F.lit(True)
     )
     n_seeds = s.count()
+    if n_seeds == 0:
+        raise ValueError("personalized_pagerank needs at least one seed")
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
     deg = e.groupBy("e_src").agg(F.count("*").alias("deg"))
     tele = F.when(
@@ -453,6 +466,5 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = _truncate(ranks, it, iterations)
     return ranks

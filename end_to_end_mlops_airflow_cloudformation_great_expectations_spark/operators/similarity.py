@@ -140,20 +140,6 @@ def hyperplane_signature(
     return sig
 
 
-def _table_signatures(vec: Column, dim: int, n_planes: int, n_tables: int) -> Column:
-    """Array of per-table bucket ids (multi-table LSH: recall
-    1-(1-p^b)^L instead of p^b — the standard L-tables trade of
-    memory/candidates for recall). Expression form — prefer
-    ``table_signatures_udf`` on whole tables: n_tables × n_planes × dim
-    expression nodes blow up analysis/codegen time."""
-    return F.array(
-        *[
-            hyperplane_signature(vec, dim, n_planes, table=t)
-            for t in range(n_tables)
-        ]
-    )
-
-
 def table_signatures_udf(n_planes: int, n_tables: int, seed: int = 42):
     """Arrow-vectorized multi-table signature: one numpy matmul per
     batch against a deterministic ±1 hyperplane matrix.

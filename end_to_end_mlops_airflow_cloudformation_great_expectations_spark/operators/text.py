@@ -225,9 +225,7 @@ def bpe_merge_rounds(
     text_col: str = "text",
     id_col: str = "doc_id",
     return_tokens: bool = False,
-    persist_rounds: bool = True,
     n_parts: int | None = None,
-    checkpoint_rounds: bool = False,
 ) -> DataFrame:
     """Iterative BPE-style tokenizer induction: ``k`` merge rounds over
     the whitespace-token corpus, returning the chosen merge per round
@@ -264,40 +262,45 @@ def bpe_merge_rounds(
     the winner is TakeOrdered(1). Survivor positions keep their
     ORIGINAL pos (gaps are fine: every window only needs a monotone
     per-doc sequence, and greedy adjacency is sequence order, not pos
-    arithmetic) — so on the PERSIST path each round's output leaves
+    arithmetic) — so when rounds are PERSISTED each round's output leaves
     the round boundary already hash-partitioned by doc_id AND sorted
     by (doc_id, pos), and rounds after the first run ZERO sorts
     (round-11 measured: the renumbering row_number broke the
-    sort-order carry and every round re-sorted). On the CHECKPOINT
-    path the LogicalRDD carries neither property (Spark 4.1, repro'd
-    r12), which is why the boundary carries ANN — see the in-loop
-    comment. ``return_tokens``
-    output is renumbered dense 0..n-1 at the END (one extra window
-    pass total, not per round) to keep its public contract. The lazy plan references round r's
-    tokens from round r+1 twice (via the winner and via the stream),
-    so EXECUTION work grows ~2^k unless each round's token stream is
-    cached: ``persist_rounds=True`` (default) marks each round's
-    tokens with a LAZY persist (build stays action-free — the
-    CLAUDE.md laziness rule; measured 3.6 → 2.78 s median at sf0.1
-    for k=3, and the gap widens with k). The cache is the token
-    stream (MEMORY_AND_DISK, spills at corpus scale); pass False to
-    trade recomputation for zero cache pressure.
+    sort-order carry and every round re-sorted). A CHECKPOINTED
+    LogicalRDD carries neither property (Spark 4.1, repro'd r12),
+    which is why the boundary carries ANN — see the in-loop comment.
+    ``return_tokens`` output is renumbered dense 0..n-1 at the END
+    (one extra window pass total, not per round) to keep its public
+    contract.
 
-    ``checkpoint_rounds=True`` is the DEPTH path (k ≥ ~8): the lazy
-    persist bounds RE-EXECUTION but not PLAN size — each round's
-    logical plan embeds the previous round's ~3 times (via the winner
-    subtree and the stream), so the analyzed plan grows exponentially
-    (measured 38 KB at k=3 → 875 KB at k=6; k=16 would not even
-    explain). ``localCheckpoint(eager=False)`` per round truncates
-    lineage at the LOGICAL level immediately — linear plan growth
-    (measured ~1 KB/round flat, test-pinned vs the persist path's
-    ~3x/round). Honesty note on build-time laziness: the checkpoint
-    itself defers data materialization, but converting each round's
-    plan to the checkpoint RDD finalizes its AdaptiveSparkPlan, which
-    runs the round's SHUFFLE STAGES as jobs at build time (bounded —
-    O(k) stages over the token stream; the k=3 persist path stays
-    fully lazy and remains the default). This is the sanctioned
-    inherently-iterative exception (the IVF-quantizer precedent):
+    The round boundary is chosen from ``k`` and ``return_tokens``:
+
+    - ``k > 3`` CHECKPOINTS every round. Each round's logical plan
+      embeds the previous round's ~3 times (via the winner subtree and
+      the stream), so the analyzed plan grows exponentially (measured
+      38 KB at k=3 → 875 KB at k=6; k=16 would not even explain). A
+      lazy persist bounds re-execution but not plan size;
+      ``localCheckpoint(eager=False)`` per round truncates lineage at
+      the LOGICAL level immediately — linear plan growth (measured
+      ~1 KB/round flat, test-pinned). Honesty note on build-time
+      laziness: the checkpoint itself defers data materialization, but
+      converting each round's plan to the checkpoint RDD finalizes its
+      AdaptiveSparkPlan, which runs the round's SHUFFLE STAGES as jobs
+      at build time (bounded — O(k) stages over the token stream).
+    - ``k <= 3`` with ``return_tokens`` PERSISTS each round's token
+      stream lazily (build stays action-free — the build notes' laziness
+      rule). The plan references round r's tokens from round r+1 twice
+      (via the winner and via the stream), so without the cache
+      execution work grows ~2^k (measured 3.6 → 2.78 s median at sf0.1
+      for k=3). The cache is the token stream (MEMORY_AND_DISK, spills
+      at corpus scale).
+    - ``k <= 3`` returning the merge table adds NO cache: the
+      per-round winner branches share their pair-count aggregate
+      exchanges, so ReusedExchange already dedupes the heavy work and
+      per-round cache fills only add jobs.
+
+    The checkpoint path is the sanctioned inherently-iterative
+    exception (the IVF-quantizer precedent):
     depth is impossible without lineage cuts, and every lineage cut
     in Spark executes. The checkpointed round RDDs live on executor
     block storage; at 100 TB this is the same trade every iterative
@@ -311,6 +314,17 @@ def bpe_merge_rounds(
     k's winner."""
     from pyspark.sql import Window
 
+    if k < 1:
+        raise ValueError(f"bpe_merge_rounds needs k >= 1, got {k}")
+    # The round boundary (see the docstring). k > 3: lineage growth is
+    # the binding constraint, checkpoint every round. k <= 3 merge
+    # table: ReusedExchange already shares the winner branches' pair
+    # counts, and per-round cache fills only added jobs (r11
+    # interleaved A/B: no-persist 2.3-2.6 s vs persist 2.5-3.0 s
+    # steady, first run 3.5 vs 11.2 s). k <= 3 token stream: measured
+    # FASTER with persist.
+    checkpoint = k > 3
+    persist = return_tokens and not checkpoint
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col))
     if n_parts is not None:
         # ONE bounded exchange up front: hashpartitioning(doc_id, n)
@@ -350,7 +364,7 @@ def bpe_merge_rounds(
     # sort+window work runs ONCE per round, in the apply.
     ann = tok.withColumn("nxt", F.lead("sym").over(w))
     for r in range(k):
-        if checkpoint_rounds:
+        if checkpoint:
             # Round 0 IS checkpointed even though there is no lineage
             # to cut yet: the winner's persisted 1-row plan and the
             # apply run as SEPARATE AQE plan instances, and exchange
@@ -368,7 +382,7 @@ def bpe_merge_rounds(
             ann = ann.localCheckpoint(
                 eager=False, storageLevel=StorageLevel.DISK_ONLY
             )
-        elif persist_rounds:
+        elif persist:
             ann = _persist_tracked(ann, fresh=(r == 0))
         counts = (
             ann.filter(F.col("nxt").isNotNull())
@@ -378,7 +392,7 @@ def bpe_merge_rounds(
         top1 = counts.orderBy(
             F.desc("cnt"), F.asc("a"), F.asc("b")
         ).limit(1)
-        if persist_rounds or checkpoint_rounds:
+        if persist or checkpoint:
             # The 1-row winner is referenced TWICE: by the apply's
             # broadcast and by the final merge-table union. Without its
             # own (lazy, tiny) persist the union re-runs every round's
@@ -387,9 +401,7 @@ def bpe_merge_rounds(
             # reused-and-expensive intermediates). fresh only on the
             # checkpoint path's FIRST persist (the persist path's round-0
             # tok cache already evicted prior operator caches).
-            top1 = _persist_tracked(
-                top1, fresh=(checkpoint_rounds and r == 0)
-            )
+            top1 = _persist_tracked(top1, fresh=(checkpoint and r == 0))
         rounds.append(
             top1.select(
                 F.lit(r + 1).cast("long").alias("round"),

@@ -48,11 +48,6 @@ def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df)
 
 
-def uses_sort_merge_or_shuffled_hash(df: DataFrame) -> bool:
-    p = physical_plan(df)
-    return "SortMergeJoin" in p or "ShuffledHashJoin" in p
-
-
 def uses_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in physical_plan(df)
 

@@ -710,16 +710,6 @@ def text_bpe_merges_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         k=3,
         n_parts=catalog.bounded_parts(spark, sf_dir, "documents"),
-        # r11 optimization (§2.4/§5): at k=3 the merge-table output's
-        # per-round winner branches share their pair-count aggregate
-        # EXCHANGES, so ReusedExchange already dedupes the heavy work —
-        # the per-round cache fills only added jobs (interleaved A/B:
-        # no-persist 2.3-2.6 s vs persist 2.5-3.0 s steady, first run
-        # 3.5 vs 11.2 s). The token-stream consumers (apply/encode)
-        # measured FASTER with persist and keep it; k=16 keeps
-        # checkpoint_rounds (lineage growth is the binding constraint
-        # there, measured exponential without it).
-        persist_rounds=False,
     )
 
 

@@ -1,7 +1,6 @@
-"""Round-8 continuation additions (registered AFTER the pinned r8
-window and the staged _ROUND9_WINDOW; rotation slot round 10+ —
-CLAUDE.md new-query discipline: each proven local-green at sf0.001 +
-sf0.01 incl. --plain before landing).
+"""Round-8 continuation additions (build-notes new-query discipline:
+each proven local-green at sf0.001 + sf0.01 incl. --plain before
+landing).
 
 Theme: the remaining classical NONPARAMETRIC / SEQUENTIAL statistics
 over bounded post-aggregation series, plus calibration, multiple

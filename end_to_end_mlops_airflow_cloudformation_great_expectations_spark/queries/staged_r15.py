@@ -1,7 +1,5 @@
-"""Round-9 additions (registered AFTER the live r9 window and the
-pinned _ROUND10_WINDOW; rotation slot round 11+ — CLAUDE.md
-new-query discipline: each proven local-green at sf0.001 + sf0.01
-incl. --plain before landing).
+"""Round-9 additions (build-notes new-query discipline: each proven
+local-green at sf0.001 + sf0.01 incl. --plain before landing).
 
 - ``dedup_image_phash`` — perceptual image near-dedup (VERDICT r08
   item 7): the IMAGE rung of the dedup ladder, next to text

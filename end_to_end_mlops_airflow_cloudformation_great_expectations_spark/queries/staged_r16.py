@@ -1,7 +1,6 @@
 """Round-10 additions (VERDICT r09 items 2-3): exact-substring dedup
 (the Lee et al. rung) and BPE corpus encoding (closing the
-induce -> apply -> pack tokenizer loop). Registered BEHIND the live
-driver window; enqueued in _ROUND12_QUEUE for the r12 rotation.
+induce -> apply -> pack tokenizer loop).
 """
 
 from __future__ import annotations
@@ -200,7 +199,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the merge application is k bounded window passes per doc
     (partitionBy doc_id — never a global sort); only narrow
     (doc_id, counts) rows enter the packing shuffle; text never
-    moves. Lazy end to end (persist_rounds marks round caches
+    moves. Lazy end to end (return_tokens at k=3 marks round caches
     lazily)."""
     from .. import catalog
     from ..operators import packing, text

@@ -1,7 +1,5 @@
-"""Round-11 additions. Registered BEHIND the live driver window;
-enqueued in _ROUND13_QUEUE for the r13 rotation. Same discipline as
-every prior staged batch: proven green at sf0.001+sf0.01 incl.
---plain BEFORE landing.
+"""Round-11 additions. Same discipline as every prior staged batch:
+proven green at sf0.001+sf0.01 incl. --plain BEFORE landing.
 """
 
 from __future__ import annotations
@@ -51,8 +49,8 @@ def text_bpe_merges_k16(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the loop at k=3 demo depth; a real tokenizer needs
     hundreds of merges, and the blocker was PLAN growth, not data
     volume): 16 merge rounds with per-round lineage truncation
-    (operators/text.bpe_merge_rounds(checkpoint_rounds=True) —
-    localCheckpoint per round cuts the ~3x-per-round logical plan
+    (operators/text.bpe_merge_rounds checkpoints every round when
+    k > 3 — localCheckpoint per round cuts the ~3x-per-round logical plan
     blowup to linear, measured 38 KB@k=3 -> 875 KB@k=6 exponential
     vs ~1 KB/round flat checkpointed, test-pinned). Build-time
     laziness exception, documented in the operator: finalizing each
@@ -83,7 +81,6 @@ def text_bpe_merges_k16(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bpe_merge_rounds(
         _t(spark, sf_dir, "documents"),
         k=_K16,
-        checkpoint_rounds=True,
         n_parts=catalog.bounded_parts(spark, sf_dir, "documents"),
     )
 

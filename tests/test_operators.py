@@ -295,17 +295,36 @@ def test_segmented_ewma_matches_sequential_and_survives_tiny_batches(spark):
         spark.conf.set(batch_key, old)
 
 
-def test_pagerank_rejects_bad_checkpoint_every(spark):
-    """checkpoint_every is a modulus: 0 would ZeroDivisionError deep
-    in the loop and negatives would silently never truncate lineage —
-    both must fail fast at entry (ADVICE r04)."""
-    import pytest
+def test_fixpoint_operators_reject_empty_inputs(spark):
+    """Degenerate inputs fail fast at entry with a ValueError, not
+    deep in the arithmetic: pagerank over no edges (1/|V| with
+    |V| = 0), personalized_pagerank with no seeds (1/|S|), and
+    bpe_merge_rounds with k = 0 (an empty merge table)."""
+    from pyspark.sql import types as T
 
     from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators.graph import (
         pagerank,
+        personalized_pagerank,
+    )
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators.text import (
+        bpe_merge_rounds,
     )
 
     edges = spark.createDataFrame([(1, 2), (2, 1)], ["src", "dst"])
-    for bad in (0, -3):
-        with pytest.raises(ValueError, match="checkpoint_every"):
-            pagerank(edges, iterations=2, checkpoint_every=bad)
+    no_edges = spark.createDataFrame(
+        [], T.StructType([T.StructField("src", T.LongType()), T.StructField("dst", T.LongType())])
+    )
+    with pytest.raises(ValueError, match="at least one edge"):
+        pagerank(no_edges, iterations=2)
+    no_seeds = spark.createDataFrame(
+        [], T.StructType([T.StructField("vid", T.LongType())])
+    )
+    with pytest.raises(ValueError, match="at least one seed"):
+        personalized_pagerank(edges, no_seeds, iterations=2)
+    docs = spark.createDataFrame([(1, "a b a b")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="k >= 1"):
+        bpe_merge_rounds(docs, k=0)
+    # the valid inputs still run: ranks over the 2-cycle stay uniform
+    ranks = sorted(tuple(r) for r in pagerank(edges, iterations=2).collect())
+    assert [i for i, _ in ranks] == [1, 2]
+    assert [r for _, r in ranks] == pytest.approx([0.5, 0.5])

@@ -813,6 +813,32 @@ def _build_jobs(spark, build, group: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
 
+#: Spark jobs one fixpoint query may launch while building (sf0.001,
+#: local[8]): now 29 / 45 / 16. Connected components runs one job per
+#: round, because its convergence count is an Observation on the eager
+#: checkpoint, and k-core cuts its lineage every 3 rounds. A separate
+#: count action per round plus a k-core cut every 2 rounds gave
+#: 39 / 59 / 21.
+_FIXPOINT_JOB_CEILINGS = {
+    "g_connected_components": 29,
+    "dedup_cluster_canonical": 45,
+    "g_kcore": 16,
+}
+
+
+def test_fixpoint_build_jobs_are_pinned(spark):
+    for name in _FIXPOINT_JOB_CEILINGS:
+        QUERIES[name](spark, SF_DIR)  # warm the catalog memo
+    jobs = {
+        n: _build_jobs(
+            spark, lambda n=n: QUERIES[n](spark, SF_DIR), f"fixpoint-build-{n}"
+        )
+        for n in _FIXPOINT_JOB_CEILINGS
+    }
+    over = {n: c for n, c in jobs.items() if c > _FIXPOINT_JOB_CEILINGS[n]}
+    assert not over, (over, jobs)
+
+
 @pytest.fixture(scope="module")
 def hot_indexes(spark, tmp_path_factory):
     """A persisted MinHash and IVF index, each base + one committed

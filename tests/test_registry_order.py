@@ -51,77 +51,28 @@ def test_coverage_md_totals_match_registry():
     assert rows_only == len(QUERIES) - len(ORACLES)
 
 
-def test_round9_window_is_greened_history():
-    """The r9 window greened in CORRECTNESS_r09 (50/50); keep its
-    composition pinned so the ledger accounting stays auditable."""
-    w9 = _qpkg._ROUND9_WINDOW
-    assert len(w9) == 50
-    assert len(set(w9)) == 50
-    assert not set(w9) & set(_qpkg._ROUND8_WINDOW)
-    assert [n for n in w9 if n not in ORACLES] == []
-    assert w9[:42] == _qpkg._ROUND9_QUEUE
-
-
-def test_round10_window_is_greened_history():
-    """The r10 window greened in CORRECTNESS_r10 (50/50); keep its
-    composition pinned so the ledger accounting stays auditable."""
-    w10 = _qpkg._ROUND10_WINDOW
-    assert len(w10) == 50
-    assert len(set(w10)) == 50
-    assert [n for n in w10 if n not in ORACLES] == []
-    pads = set(w10) & set(_qpkg._ROUND8_WINDOW)
-    assert pads == {"sql_tpch_q1", "sql_tpch_q6", "sql_tpch_q12"}
-    assert set(w10[-3:]) == pads
-
-
-def test_round11_window_is_greened_history():
-    """The r11 window greened in CORRECTNESS_r11 (50/50); keep its
-    composition pinned so the ledger accounting stays auditable."""
-    w11 = _qpkg._ROUND11_WINDOW
-    assert len(w11) == 50
-    assert len(set(w11)) == 50
-    assert [n for n in w11 if n not in ORACLES] == []
-    assert w11[:21] == _qpkg._ROUND11_QUEUE
-    assert set(w11[21:]) <= set(_qpkg._ROUND9_QUEUE)
-    assert not set(w11) & set(_qpkg._ROUND10_WINDOW)
-
-
-def test_round12_window_is_live():
-    """VERDICT r11 item 8 + the final-round rotation: CORRECTNESS_r11
-    landed 50/50 green, so the recomposed r12 window is live — the 7
-    round-10 additions + 7 round-11 additions (together the COMPLETE
-    never-driver-checked partition), the three queries the r11
-    optimization session semantics-touched outside its window
-    (train_qr_banded, text_bpe_merges_k explicit; a_hodges_lehmann via
-    the r10 pads), and r10-green pads. Greening it closes the ENTIRE
-    oracle-backed ledger. Invariant: every oracle-backed query is
-    driver-green in the CORRECTNESS_r01.. artifact union or sits in the
-    driver window — an addition that is neither fails here."""
+def test_window_holds_every_oracle_query_not_yet_driver_green():
+    """Invariant: every oracle-backed query is driver-green in the
+    CORRECTNESS_r01.. artifact union or sits in the driver window — an
+    addition that is neither fails here. The window is 50 distinct
+    oracle-backed names; its first 14 slots held the final rotation's
+    never-checked queries, and every slot after them is a driver-green
+    pad."""
     import json
     import pathlib
 
-    w12 = _qpkg._ROUND12_WINDOW
-    assert _qpkg._DRIVER_WINDOW_FIRST is w12
-    assert len(w12) == 50
-    assert len(set(w12)) == 50
-    assert [n for n in w12 if n not in ORACLES] == []
-    assert w12[:7] == _qpkg._ROUND12_QUEUE
-    assert w12[7:14] == _qpkg._ROUND13_QUEUE
-    # VERDICT r11 item 8: the three semantics-touched queries are in
-    assert {"train_qr_banded", "text_bpe_merges_k", "a_hodges_lehmann"} <= set(
-        w12
-    )
-    # every oracle-backed query is driver-green in some CORRECTNESS_r*
-    # artifact or sits in the driver window; pads are all green
+    w = _qpkg._DRIVER_WINDOW_FIRST
+    assert len(w) == 50
+    assert len(set(w)) == 50
+    assert [n for n in w if n not in ORACLES] == []
     root = pathlib.Path(__file__).resolve().parents[1]
     green = set()
     for f in sorted(root.glob("CORRECTNESS_r*.json")):
         for name, row in json.loads(f.read_text()).items():
             if isinstance(row, dict) and row.get("rows_match") and row.get("err") is None:
                 green.add(name)
-    assert set(ORACLES) - green <= set(_qpkg._DRIVER_WINDOW_FIRST)
-    assert set(w12[14:]) <= green
-    assert not set(_qpkg._ROUND12_QUEUE) & set(_qpkg._ROUND13_QUEUE)
+    assert set(ORACLES) - green <= set(w)
+    assert set(w[14:]) <= green
 
 
 def test_rerecord_refuses_throttled_host():

@@ -124,10 +124,11 @@ def test_bpe_k16_matches_sequential_greedy_replay(spark):
 
 def test_bpe_checkpoint_rounds_linear_plan_growth(spark):
     """The depth path's reason to exist: the analyzed logical plan must
-    grow LINEARLY with k under checkpoint_rounds (the persist path is
-    ~3x per round — 38 KB at k=3, 875 KB at k=6, measured). Pin
-    per-round plan growth to a constant band so a refactor that loses
-    the lineage cut fails here, not at explainString OOM."""
+    grow LINEARLY with k once k > 3 checkpoints every round (the
+    persisted plan is ~3x per round — 38 KB at k=3, 875 KB at k=6,
+    measured). Pin per-round plan growth to a constant band so a
+    refactor that loses the lineage cut fails here, not at
+    explainString OOM."""
     from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
         catalog,
     )
@@ -135,7 +136,7 @@ def test_bpe_checkpoint_rounds_linear_plan_growth(spark):
     docs = catalog.load(spark, SF_DIR, "documents")
 
     def plan_chars(k: int) -> int:
-        df = T.bpe_merge_rounds(docs, k=k, checkpoint_rounds=True)
+        df = T.bpe_merge_rounds(docs, k=k)
         return len(df._jdf.queryExecution().analyzed().toString())
 
     p4, p8, p16 = plan_chars(4), plan_chars(8), plan_chars(16)
@@ -146,13 +147,13 @@ def test_bpe_checkpoint_rounds_linear_plan_growth(spark):
 
 
 def test_bpe_checkpoint_rounds_build_jobs_bounded(spark):
-    """checkpoint_rounds is the SANCTIONED inherently-iterative
+    """Checkpointed rounds (k > 3) are the SANCTIONED inherently-iterative
     laziness exception (documented in the operator): finalizing each
     round's checkpoint RDD materializes that round's shuffle stages
     as build-time jobs. Pin the job count to O(k) so a refactor that
     re-executes earlier rounds (losing the lineage cut's caching
-    effect) fails here; and pin that the k=3 persist path stays
-    FULLY lazy at build."""
+    effect) fails here; and pin that the k=3 persist path (taken with
+    return_tokens) stays FULLY lazy at build."""
     from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
         catalog,
     )
@@ -163,7 +164,7 @@ def test_bpe_checkpoint_rounds_build_jobs_bounded(spark):
 
     sc.setJobGroup("bpe-persist-probe", "persist build")
     try:
-        T.bpe_merge_rounds(docs, k=3)  # default persist path
+        T.bpe_merge_rounds(docs, k=3, return_tokens=True)  # persist path
         persist_jobs = set(tracker.getJobIdsForGroup("bpe-persist-probe") or [])
     finally:
         sc.setJobGroup("", "")
@@ -172,7 +173,7 @@ def test_bpe_checkpoint_rounds_build_jobs_bounded(spark):
     k = 6
     sc.setJobGroup("bpe-ckpt-probe", "checkpoint build")
     try:
-        T.bpe_merge_rounds(docs, k=k, checkpoint_rounds=True)
+        T.bpe_merge_rounds(docs, k=k)
         ckpt_jobs = set(tracker.getJobIdsForGroup("bpe-ckpt-probe") or [])
     finally:
         sc.setJobGroup("", "")
