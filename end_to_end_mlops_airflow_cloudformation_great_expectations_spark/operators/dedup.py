@@ -23,31 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-#: Caches created by the most recent minhash_neardup_pairs call. The
-#: returned DataFrame must stay lazy (the driver contract builds plans
-#: without side effects), so the hashed-shingle cache can't be
-#: unpersisted inside the call — instead each new call evicts the
-#: previous call's cache, bounding a long-lived session (bench loops,
-#: pipelines) at ONE live cache instead of an unbounded accumulation.
-#: Unpersisting a cache a still-lazy earlier result references is safe:
-#: that plan just recomputes. Not thread-safe; concurrent pipelines
+from .caches import tracked_persist
+
+#: Caches of the most recent minhash_neardup_pairs-family call (and of
+#: text.bpe_merge_rounds, which shares this set). Concurrent pipelines
 #: should pass their own pre-persisted shingle tables.
-_live_caches: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame, *, fresh: bool = True) -> DataFrame:
-    """Persist ``df``, evicting caches from PREVIOUS operator calls.
-
-    ``fresh=True`` (an operator's first persist) drops every cache the
-    module still tracks; ``fresh=False`` adds a second cache belonging
-    to the SAME operator call (e.g. minhash's shingle table + candidate
-    pairs) without evicting the first — both stay live until the next
-    operator call starts."""
-    if fresh:
-        while _live_caches:
-            _live_caches.pop().unpersist(blocking=False)
-    _live_caches.append(df.persist())
-    return df
+_persist_tracked = tracked_persist()
 
 
 # ---------------------------------------------------------------------------
@@ -789,13 +770,12 @@ def minhash_dedup_incremental(
 
 # ---------------------------------------------------------------------------
 # Persisted MinHash index lifecycle (VERDICT r06 item 6): the on-disk
-# build/append/probe/compact protocol the ANN index already has
-# (operators/similarity.py ivf_index_*), applied to the dedup index —
-# without it, an incremental corpus that churns forever accumulates
-# delta postings unboundedly. Shared commit/ledger/tombstone
-# discipline lives in operators/ledger.py; the MinHash index folds TWO
-# tables per compaction (band-bucket postings + hashed-shingle arrays)
-# under ONE commit point, so any crash leaves them mutually consistent.
+# build/append/probe/compact protocol every persisted index shares
+# (operators/ledger.py), applied to the dedup index — without it, an
+# incremental corpus that churns forever accumulates delta postings
+# unboundedly. The MinHash index folds TWO tables per compaction
+# (band-bucket postings + hashed-shingle arrays) under ONE commit
+# point, so any crash leaves them mutually consistent.
 # ---------------------------------------------------------------------------
 
 #: The two tables a persisted MinHash index maintains: ``postings``

@@ -2,7 +2,7 @@
 indexes (MinHash: :mod:`.dedup`; BM25: :mod:`.textindex`; IVF,
 embedding-dedup and HNSW: :mod:`.similarity`).
 
-All of them share one maintenance protocol (the LSM-ish discipline a
+All five share one maintenance protocol (the LSM-ish discipline a
 100 TB index needs — an object store gives you atomic rename and
 nothing else):
 
@@ -14,6 +14,20 @@ nothing else):
 - the ledger doubles as the TOMBSTONE set: a replayed append whose
   batch id is already folded must no-op, and readers skip folded
   delta dirs even if a crash left them on disk.
+
+PARTITIONED BASES (the IVF postings, ``partitionBy("cell")`` so a
+probe reads only its cells' directories): a table's partition columns
+are read off its resolved base directory (Hive-style ``col=value``
+subdirectories), never passed in. Deltas are always written
+unpartitioned — the sink needs no partition spec, so it cannot race a
+compactor that is swapping the base. Spark cannot read a partitioned
+root and unpartitioned roots in one scan (nor several partitioned
+roots: CONFLICTING_DIRECTORY_STRUCTURES), so a partitioned table is
+read as the base scan ``unionByName`` one scan of all live deltas, and
+compaction rewrites it with the same ``partitionBy``. Unpartitioned
+tables stay one scan of base + deltas. A partition column must be a
+type its directory names infer back to (int or string): the delta scan
+reuses the base's schema.
 
 The ledger append IS the compaction commit point, so it must be
 all-or-nothing (ADVICE r06): a buffered in-place append can persist a
@@ -110,13 +124,11 @@ def write_folded_manifest(new_dir: str, ids) -> None:
 # ---------------------------------------------------------------------------
 # Generic multi-table delta index (the protocol instantiated by the
 # MinHash dedup index — operators/dedup.py — the BM25 retrieval index
-# — operators/textindex.py — and the embedding-dedup and HNSW indexes
-# in similarity.py). The IVF index in similarity.py commits through
-# the same primitives (read_ledger, committed_new, swap_forward) but
-# keeps its cell-partitioned ``postings_delta/b{id}`` layout: several
-# cell-partitioned roots cannot be read in one scan. Layout:
+# — operators/textindex.py — and the IVF, embedding-dedup and HNSW
+# indexes in similarity.py). Layout:
 #
-#   {base_dir}/{table}/            per-table base parquet
+#   {base_dir}/{table}/            per-table base parquet (may be
+#                                  partitioned: see module docstring)
 #   {base_dir}/delta/b{id}/{table} per-batch delta, committed by a
 #                                  root _SUCCESS written after ALL
 #                                  subtables finish
@@ -125,23 +137,58 @@ def write_folded_manifest(new_dir: str, ids) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _partition_cols(path: str) -> list:
+    """Hive-style partition columns of the parquet table at ``path``:
+    the ``col=value`` names down its first partition directory chain
+    (``[]`` for an unpartitioned or missing table)."""
+    cols = []
+    while os.path.isdir(path):
+        with os.scandir(path) as entries:
+            sub = next(
+                (e.name for e in entries if e.is_dir() and "=" in e.name),
+                None,
+            )
+        if sub is None:
+            break
+        cols.append(sub.split("=", 1)[0])
+        path = os.path.join(path, sub)
+    return cols
+
+
+def _read_table(spark, base_dir, table, base_path, deltas):
+    """One table of a snapshot: ``base_path`` plus ``deltas``' copies of
+    it, every scan with the footer schema memoized under
+    ``{base_dir}/{table}``. An unpartitioned table is ONE scan; a
+    partitioned base cannot share a scan with the unpartitioned deltas,
+    so it is the base scan ``unionByName`` one scan of the deltas."""
+    from .. import catalog
+
+    key = os.path.join(base_dir, table)
+    paths = [os.path.join(d, table) for d in deltas]
+    if not _partition_cols(base_path):
+        return catalog.read_parquet(spark, base_path, *paths, key=key)
+    df = catalog.read_parquet(spark, base_path, key=key)
+    if paths:
+        df = df.unionByName(catalog.read_parquet(spark, *paths, key=key))
+    return df
+
+
 def resolve_delta_tables(spark, base_dir: str, tables) -> dict:
-    """READ-ONLY snapshot resolution: each table as ONE scan of base +
-    committed, unfolded deltas, its footer schema memoized under
-    ``{base_dir}/{table}`` (``catalog.read_parquet``). Never mutates
+    """READ-ONLY snapshot resolution: each table as its base + committed,
+    unfolded deltas (one scan, or two for a partitioned base), its
+    footer schema memoized under ``{base_dir}/{table}``
+    (``catalog.read_parquet``). Never mutates
     the directory (ADVICE r06: a reader racing a live compactor must
     not delete its in-flight output): a committed-but-unswapped
     ``{table}_new`` already contains the folded deltas, so it is read
     AS the base; ledger-folded delta dirs are skipped either way, so
     every appended row is counted exactly once at any crash point."""
-    from .. import catalog
-
     folded = read_ledger(base_dir)
     delta_root = os.path.join(base_dir, "delta")
     live = []
     if os.path.isdir(delta_root):
         live = [
-            d
+            os.path.join(delta_root, d)
             for d in sorted(os.listdir(delta_root))
             if d not in folded
             and os.path.exists(os.path.join(delta_root, d, "_SUCCESS"))
@@ -152,12 +199,7 @@ def resolve_delta_tables(spark, base_dir: str, tables) -> dict:
         new_dir = os.path.join(base_dir, f"{table}_new")
         if committed_new(base_dir, new_dir):
             base_path = new_dir
-        out[table] = catalog.read_parquet(
-            spark,
-            base_path,
-            *[os.path.join(delta_root, d, table) for d in live],
-            key=os.path.join(base_dir, table),
-        )
+        out[table] = _read_table(spark, base_dir, table, base_path, live)
     return out
 
 
@@ -234,10 +276,9 @@ def compact_delta_index(spark, base_dir: str, tables) -> None:
     after; only the file layout changes (fewer, larger files). Crash-
     recoverable at every step via recover_delta_index; ledger entries
     tombstone folded batch ids so re-delivered appends cannot
-    double-insert."""
+    double-insert. A partitioned base is rewritten with the same
+    ``partitionBy``."""
     import shutil
-
-    from .. import catalog
 
     recover_delta_index(base_dir, tables)
     delta_root = os.path.join(base_dir, "delta")
@@ -258,14 +299,20 @@ def compact_delta_index(spark, base_dir: str, tables) -> None:
             shutil.rmtree(delta_root, ignore_errors=True)
         return
     for table in tables:
-        df = catalog.read_parquet(
+        base_path = os.path.join(base_dir, table)
+        df = _read_table(
             spark,
-            os.path.join(base_dir, table),
-            *[os.path.join(delta_root, d, table) for d in folded],
-            key=os.path.join(base_dir, table),
+            base_dir,
+            table,
+            base_path,
+            [os.path.join(delta_root, d) for d in folded],
         )
         new_dir = os.path.join(base_dir, f"{table}_new")
-        df.write.mode("overwrite").parquet(new_dir)
+        writer = df.write.mode("overwrite")
+        parts = _partition_cols(base_path)
+        if parts:
+            writer = writer.partitionBy(*parts)
+        writer.parquet(new_dir)
         write_folded_manifest(new_dir, folded)
     # COMMIT POINT: all _new tables fully materialized; one atomic
     # ledger write commits the fold for every subtable, so readers and

@@ -29,20 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .caches import tracked_persist
 from .similarity import dot
 
-#: Tracked lazy caches (the operators/dedup.py convention): persist()
-#: runs no job; the next operator call evicts the previous call's
-#: caches so a long-lived session holds one live cache set.
-_live_caches: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame, *, fresh: bool = True) -> DataFrame:
-    if fresh:
-        while _live_caches:
-            _live_caches.pop().unpersist(blocking=False)
-    _live_caches.append(df.persist())
-    return df
+_persist_tracked = tracked_persist()
 
 
 def moment_partials(e: DataFrame, vec_col: str = "embedding") -> DataFrame:

@@ -23,19 +23,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .caches import tracked_persist
 
-#: Most-recent call's cache (same contract as operators.dedup: results
-#: stay lazy, so each new call evicts the previous call's cache rather
-#: than unpersisting mid-plan — bounds long-lived sessions at one live
-#: cache; an evicted plan silently recomputes).
-_live_caches: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    while _live_caches:
-        _live_caches.pop().unpersist(blocking=False)
-    _live_caches.append(df.persist())
-    return df
+_persist_tracked = tracked_persist()
 
 
 # The vector helpers take array column NAMES and return one SQL
@@ -228,6 +218,15 @@ def _sample_vectors(prepared: DataFrame, sample_size: int) -> "np.ndarray":
     return np.asarray([r[0] for r in rows], dtype=np.float64)
 
 
+def _check_n_centroids(op: str, n_centroids: int) -> None:
+    """Reject a cell count below 1 before any job or write runs: with
+    no Lloyd round to fail first, it would reach ivf_index_build's
+    overwrite and fail inside an executor's cell assignment, after the
+    old index is gone."""
+    if n_centroids < 1:
+        raise ValueError(f"{op}: n_centroids must be >= 1, got {n_centroids}")
+
+
 def _train_coarse_quantizer(
     prepared: DataFrame,
     n_centroids: int,
@@ -403,6 +402,11 @@ def routed_entry_points(
     )
 
 
+#: The IVF index's one delta-maintained table (shared protocol,
+#: operators/ledger.py); its base is partitioned by cell.
+_IVF_TABLES = ("postings",)
+
+
 def ivf_index_build(
     corpus: DataFrame,
     base_dir: str,
@@ -426,7 +430,8 @@ def ivf_index_build(
     skipping, which is the entire economics of IVF over a 100 TB
     corpus (test-pinned via PartitionFilters in the search plan).
     Quantizer training collects the usual bounded deterministic
-    sample (rows-only discipline, similarity.py:232)."""
+    sample (rows-only discipline, ``_train_coarse_quantizer``)."""
+    _check_n_centroids("ivf_index_build", n_centroids)
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("cv"),
@@ -452,48 +457,6 @@ def ivf_index_build(
     ).coalesce(1).write.mode("overwrite").parquet(f"{base_dir}/centroids")
 
 
-def _recover_compaction(base_dir: str) -> None:
-    """Finish or roll back a compaction interrupted by a crash, so
-    compact always starts from a consistent layout. DESTRUCTIVE — only
-    ivf_index_compact (the single writer) may call this; the search
-    path resolves a readable snapshot WITHOUT mutating the directory
-    (ADVICE r06: a search racing a live compactor must not delete the
-    compactor's in-flight postings_new).
-
-    - ``postings_new`` present but NOT committed (missing ``_SUCCESS``
-      / ``_FOLDED`` manifest, or the manifest ids are not yet in the
-      ledger — the crash happened before the ledger commit point):
-      roll BACK — delete it; the old base + deltas are authoritative.
-    - committed ``postings_new`` present (``_FOLDED`` ids ⊆ ledger):
-      roll FORWARD — finish the swap exactly as compact would have.
-    - ``postings_old`` leftover with ``postings`` present: the swap
-      completed; drop the aside copy.
-    - delta dirs whose ids are in the ledger: already folded — remove.
-    """
-    import os
-    import shutil
-
-    from . import ledger
-
-    new_dir = os.path.join(base_dir, "postings_new")
-    if os.path.isdir(new_dir) and not ledger.committed_new(base_dir, new_dir):
-        # pre-commit crash — old state authoritative
-        shutil.rmtree(new_dir, ignore_errors=True)
-    ledger.swap_forward(base_dir, "postings")
-    folded = ledger.read_ledger(base_dir)
-    delta_root = os.path.join(base_dir, "postings_delta")
-    if os.path.isdir(delta_root):
-        # remove ONLY ledger-listed (folded) dirs; unmarked dirs with no
-        # _SUCCESS may be an in-flight append's partial write (ADVICE
-        # r06) — the append sink's replay will overwrite aborted ones
-        live = [d for d in sorted(os.listdir(delta_root)) if d not in folded]
-        for d in os.listdir(delta_root):
-            if d in folded:
-                shutil.rmtree(os.path.join(delta_root, d), ignore_errors=True)
-        if not live:
-            shutil.rmtree(delta_root, ignore_errors=True)
-
-
 def ivf_index_search(
     queries: DataFrame,
     base_dir: str,
@@ -507,52 +470,21 @@ def ivf_index_search(
     (broadcast), rank cells per query, keep n_probe, then join the
     probe set against the cell-partitioned postings — the cell
     equi-join becomes dynamic partition pruning on the postings read,
-    so only probed cells' files are scanned. Identical output to
+    so only probed cells' files are scanned (appended deltas are
+    unpartitioned and read whole until a compaction folds them into
+    the base). Identical output to
     ivf_topk run with the same build parameters (test-pinned): the
     index relocation changes WHERE the work happens, not the answer."""
-    import os
-
     from .. import catalog
     from . import ledger
 
     spark = queries.sparkSession
     cent_df = catalog.read_parquet(spark, f"{base_dir}/centroids")
-    # READ-ONLY snapshot resolution (ADVICE r06): the search path never
-    # mutates the index directory — destructive crash recovery belongs
-    # to ivf_index_compact, the single writer. A committed-but-unswapped
-    # ``postings_new`` (crash or live compactor between the ledger
-    # commit and the rename) already contains the folded deltas, so
-    # read IT as the base; otherwise read the current base. Either way
-    # ledger-folded delta dirs are skipped below, so every appended row
-    # is counted exactly once at any crash point — without deleting
-    # anything out from under an in-flight compactor. Every root is read
-    # with the footer schema memoized under ``{base_dir}/postings``.
-    key = os.path.join(base_dir, "postings")
-    base_path = key
-    if ledger.committed_new(base_dir, f"{base_dir}/postings_new"):
-        base_path = f"{base_dir}/postings_new"
-    postings = catalog.read_parquet(spark, base_path, key=key)
-    # streaming deltas (ivf_index_append): each b{batch_id} directory
-    # is its own cell-partitioned layout — union them in, so a search
-    # always sees base + every appended batch without any rebuild.
-    # Delta ids in the compaction ledger are already folded into the
-    # base and partial deltas (no _SUCCESS) are aborted writes the
-    # append sink will redo — skip both. One scan of several
-    # cell-partitioned roots fails (CONFLICTING_DIRECTORY_STRUCTURES),
-    # so each root is its own read.
-    delta_root = f"{base_dir}/postings_delta"
-    folded = ledger.read_ledger(base_dir)
-    if os.path.isdir(delta_root):
-        for d in sorted(os.listdir(delta_root)):
-            if d in folded or not os.path.exists(
-                os.path.join(delta_root, d, "_SUCCESS")
-            ):
-                continue
-            postings = postings.unionByName(
-                catalog.read_parquet(
-                    spark, os.path.join(delta_root, d), key=key
-                )
-            )
+    # read-only snapshot: the cell-partitioned base (probe-pruned) and
+    # one scan of the committed appends (ledger.resolve_delta_tables)
+    postings = ledger.resolve_delta_tables(spark, base_dir, _IVF_TABLES)[
+        "postings"
+    ]
     q = queries.select(
         F.col(query_id).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -590,44 +522,23 @@ def ivf_index_append(base_dir: str):
     """foreachBatch sink: keep a PERSISTED IVF index fresh as new
     vectors stream in — WITHOUT retraining or rebuilding. Each batch
     is assigned to cells by the STORED centroids (the n_centroids×dim
-    table is a bounded driver-side read per batch — FAISS's add()
-    discipline) and lands as its own cell-partitioned delta directory
-    ``postings_delta/b{batch_id}``; ivf_index_search unions base +
-    deltas, so queries see appended vectors immediately. Replay-safe:
-    a re-delivered batch_id whose delta directory already exists is a
-    no-op (appending is not idempotent — the same guard contract as
-    streaming/jobs._snapshot_guard). Input rows must carry
+    table is a bounded driver-side read, once per sink — FAISS's add()
+    discipline) and lands as the delta ``delta/b{batch_id}/postings``
+    of the shared protocol (:func:`.ledger.delta_append_sink`: root
+    ``_SUCCESS`` commit, aborted-write redo on replay, ledger
+    tombstones); ivf_index_search reads base + deltas, so queries see
+    appended vectors immediately. Input rows must carry
     (neighbor_id, cv) — the postings layout; callers project/cast
-    upstream. Compaction of many small deltas into the base layout is
-    an offline rewrite of the same table (sources/io compaction
-    pattern)."""
-    import os
-    import shutil
-
-    import numpy as np
-
+    upstream."""
     from .. import catalog
     from . import ledger
 
-    # per-stream centroid cache: the stored centroids are immutable for
-    # an index lifetime (append never retrains), so one bounded
-    # driver-side read per STREAM, not per micro-batch (ADVICE r05 /
-    # VERDICT r05 item 4 — the per-batch re-read+collect was a
-    # needless driver round-trip on every trigger).
+    # the stored centroids are immutable for an index lifetime (append
+    # never retrains): one bounded driver-side read per sink, not per
+    # micro-batch
     cache: dict = {}
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        delta = os.path.join(base_dir, "postings_delta", f"b{batch_id}")
-        if os.path.isdir(delta):
-            # replay guard — but only a _SUCCESS-marked delta is a
-            # committed append; a crash mid-write leaves a partial
-            # directory whose replay must RE-APPLY, not no-op
-            # (otherwise those vectors silently vanish from the index)
-            if os.path.exists(os.path.join(delta, "_SUCCESS")):
-                return
-            shutil.rmtree(delta, ignore_errors=True)
-        if f"b{batch_id}" in ledger.read_ledger(base_dir):
-            return  # folded into base by ivf_index_compact
+    def tables_fn(batch_df: DataFrame) -> dict:
         if "C" not in cache:
             # n_centroids rows: sorted here, not by a Spark sort's jobs
             cent = catalog.read_parquet(
@@ -637,85 +548,22 @@ def ivf_index_append(base_dir: str):
                 [r["centroid"] for r in sorted(cent, key=lambda r: r["cell"])],
                 dtype="float64",
             )
-        assigned = batch_df.withColumn(
-            "cell", _cell_assign_udf(cache["C"])(F.col("cv"))
-        )
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(delta)
+        assign = _cell_assign_udf(cache["C"])
+        return {"postings": batch_df.withColumn("cell", assign(F.col("cv")))}
 
-    return apply
+    return ledger.delta_append_sink(base_dir, tables_fn)
 
 
 def ivf_index_compact(spark, base_dir: str) -> None:
-    """Fold accumulated streaming deltas back into the base postings
-    layout — the small-files maintenance step every delta-appending
-    index needs: read base + every ``postings_delta/b*`` directory,
-    rewrite ONE cell-partitioned postings layout (version-then-swap:
-    write to ``postings_new``, atomically rename over the old base),
-    and drop the deltas. Search results are identical before and
-    after (test-pinned); only the file layout changes — fewer, larger
-    per-cell files, restoring scan efficiency after long append
-    streaks."""
-    import os
-    import shutil
-
-    from .. import catalog
+    """Fold accumulated streaming deltas back into the cell-partitioned
+    postings (:func:`.ledger.compact_delta_index`: version-then-swap,
+    one atomic ledger commit, crash-recoverable). Search results are
+    identical before and after (test-pinned); only the file layout
+    changes — fewer, larger per-cell files, restoring scan efficiency
+    after long append streaks."""
     from . import ledger
 
-    # start from a consistent layout (a prior compact may have crashed
-    # mid-protocol — finish or roll back its swap first)
-    _recover_compaction(base_dir)
-    delta_root = os.path.join(base_dir, "postings_delta")
-    if not os.path.isdir(delta_root):
-        return
-    already = ledger.read_ledger(base_dir)
-    folded = [
-        d
-        for d in sorted(os.listdir(delta_root))
-        # skip already-folded ids (double-fold = permanent duplication)
-        # and partial deltas (no _SUCCESS — an aborted append write the
-        # sink will redo; folding half a batch would commit the half)
-        if d not in already
-        and os.path.exists(os.path.join(delta_root, d, "_SUCCESS"))
-    ]
-    if not folded:
-        # nothing committed to fold. Do NOT rmtree the delta root: an
-        # unmarked (no-_SUCCESS) dir may be an in-flight append mid-
-        # write (ADVICE r06); aborted ones are overwritten on replay.
-        # Only drop the root if it is genuinely empty.
-        if not os.listdir(delta_root):
-            shutil.rmtree(delta_root, ignore_errors=True)
-        return
-    key = os.path.join(base_dir, "postings")
-    postings = catalog.read_parquet(spark, key, key=key)
-    for d in folded:
-        postings = postings.unionByName(
-            catalog.read_parquet(spark, os.path.join(delta_root, d), key=key)
-        )
-    new_dir = os.path.join(base_dir, "postings_new")
-    postings.write.mode("overwrite").partitionBy("cell").parquet(new_dir)
-    # manifest: which delta ids THIS postings_new folded — written
-    # before the ledger so recovery can tell a committed compaction
-    # (manifest ids ⊆ ledger → roll forward) from a pre-commit crash
-    # (roll back). Underscore-prefixed files are ignored by parquet
-    # readers, so it rides along through the rename.
-    ledger.write_folded_manifest(new_dir, folded)
-    # COMMIT POINT (ADVICE r05): the ledger is committed after
-    # postings_new is fully materialized but BEFORE the swap. Crash
-    # before this write → recovery deletes postings_new, deltas stay
-    # authoritative. Crash after it → recovery finishes the swap and
-    # every reader skips the folded delta dirs, so the appended rows
-    # are counted exactly once at every crash point. The write itself
-    # is atomic (temp + fsync + rename — ADVICE r06), so a crash can
-    # never persist a PREFIX of the folded ids.
-    ledger.append_ledger_atomic(base_dir, folded)
-    # swap keeps a recoverable state at every step: old base is moved
-    # aside BEFORE the new one takes its place, never deleted first;
-    # _recover_compaction finishes this sequence from any crash point.
-    ledger.swap_forward(base_dir, "postings")
-    for d in folded:
-        shutil.rmtree(os.path.join(delta_root, d), ignore_errors=True)
-    if not os.listdir(delta_root):
-        shutil.rmtree(delta_root, ignore_errors=True)
+    ledger.compact_delta_index(spark, base_dir, _IVF_TABLES)
 
 
 def ivf_topk(
@@ -750,6 +598,7 @@ def ivf_topk(
     training collects the bounded sample at call time — inherent to
     the algorithm, so this op is registered rows-only, not as a lazy
     oracle query."""
+    _check_n_centroids("ivf_topk", n_centroids)
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("cv"),
@@ -1259,6 +1108,7 @@ def ivfpq_topk(
     full-corpus passes are the two lazy Arrow encode scans. Both
     trainers collect one bounded deterministic sample (rows-only
     registration, as with IVF/PQ)."""
+    _check_n_centroids("ivfpq_topk", n_centroids)
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"),
         _as_double(F.col(vec_col)).alias("cv"),

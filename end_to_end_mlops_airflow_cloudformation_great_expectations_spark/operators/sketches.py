@@ -26,17 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: one live cache per sketch_rollup call (the dedup-module pattern:
-#: results must stay lazy, so eviction happens on the NEXT call, which
-#: bounds a long-lived session at one cached rollup)
-_live_caches: list[DataFrame] = []
+from .caches import tracked_persist
 
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    while _live_caches:
-        _live_caches.pop().unpersist(blocking=False)
-    _live_caches.append(df.persist())
-    return df
+_persist_tracked = tracked_persist()
 
 
 def sketch_rollup(

@@ -94,15 +94,17 @@ def ivf_lifecycle_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
       search(compacted base)     == search(one-shot index)   (compact_ok)
 
     — i.e. incremental maintenance changes WHERE the postings live
-    (delta dirs, then the folded cell-partitioned base) but never a
-    single search row. The one-shot twin appends the same rows as one
-    batch, so both sides share centroids and assignment arithmetic.
-    The two pre-compaction searches are collected at build time
-    (bounded: 20 queries × k rows) because compaction DELETES the
-    delta dirs their lazy plans would re-list; the post-compaction
-    search stays lazy and exercises the recovered/compacted layout —
-    including _recover_compaction — at driver collect time. All-TRUE
-    oracle (banded-oracle discipline): deterministic at fixed data."""
+    (unpartitioned ``delta/b{id}/postings`` dirs, then the folded
+    cell-partitioned base) but never a single search row. The one-shot
+    twin appends the same rows as one batch, so both sides share
+    centroids and assignment arithmetic. The two pre-compaction
+    searches are collected at build time (bounded: 20 queries × k
+    rows) because compaction DELETES the delta dirs their lazy plans
+    would re-list; the post-compaction search stays lazy and reads the
+    compacted layout (``ledger.compact_delta_index``, which runs
+    ``ledger.recover_delta_index`` first) at driver collect time.
+    All-TRUE oracle (banded-oracle discipline): deterministic at fixed
+    data."""
     from ..operators import similarity
 
     base = _scratch("ivf_life")

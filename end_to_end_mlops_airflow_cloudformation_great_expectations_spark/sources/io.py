@@ -9,8 +9,12 @@ aws_infrastructure/airflow-setup.py:268-345). Spark-first equivalents:
 - reads/writes are declarative (``spark.read``/``df.write``) against
   any Hadoop-compatible URI — the S3 copy loop becomes a single
   distributed ``read.load().write.save()`` job;
-- the partitioned sink is ``partitionBy`` (Hive layout → automatic
-  partition pruning, replacing the reference's manual file fan-out);
+- the plain parquet scan is ``catalog.read_parquet`` (S1), the
+  partitioned sink the ``partitionBy`` write in
+  ``orchestration/dag_factory.featurize_split_write`` (S2/S3: Hive
+  layout → automatic partition pruning, replacing the reference's
+  manual file fan-out), and the streaming source and sink
+  ``readStream`` / ``foreachBatch`` in ``streaming/jobs.py`` (S8/S9);
 - ``write_sorted_parquet`` produces range-partitioned, sorted,
   multi-row-group files so parquet min/max stats are selective — the
   reference writes single-row-group files (verified), which defeat
@@ -24,15 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """S1: parquet scan; explicit schema optional (footers are
-    authoritative for parquet; schema arg is for enforcing contracts)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(resolve_uri(path))
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType, header: bool = True) -> DataFrame:
     """CSV source with mandatory explicit schema (no inference job)."""
     return spark.read.schema(schema).option("header", header).csv(resolve_uri(path))
@@ -43,29 +38,12 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     return spark.read.schema(schema).json(resolve_uri(path))
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(resolve_uri(path))
-
-
 def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
     """Multimodal ingestion: one row per file with ``content: binary``
     + path/length metadata (feeds operators.multimodal)."""
     return (
         spark.read.format("binaryFile").option("pathGlobFilter", glob).load(resolve_uri(path))
     )
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S2: parquet sink."""
-    df.write.mode(mode).parquet(resolve_uri(path))
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """S3: directory-per-key sink (the reference's datasets/<vendor>/
-    layout as a single distributed job with automatic pruning on read)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(resolve_uri(path))
 
 
 def write_sorted_parquet(
@@ -93,26 +71,6 @@ def copy_dataset(spark: SparkSession, src: str, dst: str, fmt: str = "parquet") 
     boto3 loop (300 s Lambda ceiling) with one Spark job over the whole
     prefix."""
     spark.read.format(fmt).load(resolve_uri(src)).write.format(fmt).mode("overwrite").save(resolve_uri(dst))
-
-
-def read_stream_parquet(
-    spark: SparkSession, path: str, schema: T.StructType | str
-) -> DataFrame:
-    """S8: file-based streaming source (explicit schema required)."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def write_stream_parquet(
-    df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"
-):
-    """S9: streaming parquet sink with checkpointing; returns the query."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .start()
-    )
 
 
 def compact_dataset(

@@ -20,46 +20,65 @@ from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators 
 )
 
 TABLES = ("alpha", "beta")
+#: plus a third subtable whose base is written ``partitionBy("part")``,
+#: so the partitioned read and compaction branch runs too
+PARTITIONED = TABLES + ("gamma",)
 
 
-def _tables_fn(batch_df):
-    # two derived subtables from one batch: identity + a doubled copy,
-    # so a half-applied batch is detectable as cross-table skew
-    return {
+def _tables_fn(batch_df, tables=TABLES):
+    # derived subtables from one batch: identity, a doubled and a
+    # tripled copy, so a half-applied batch is detectable as
+    # cross-table skew
+    out = {
         "alpha": batch_df,
         "beta": batch_df.selectExpr("id", "val * 2 AS val"),
     }
+    if "gamma" in tables:
+        out["gamma"] = batch_df.selectExpr(
+            "id", "val * 3 AS val", "CAST(id % 3 AS INT) AS part"
+        )
+    return out
 
 
-def _resolved_ids(spark, base):
-    out = ledger.resolve_delta_tables(spark, base, TABLES)
-    a = sorted((r.id, r.val) for r in out["alpha"].collect())
-    b = sorted((r.id, r.val) for r in out["beta"].collect())
-    return a, b
+def _write_base(spark, base, tables):
+    first = spark.createDataFrame([(0, 0)], "id long, val long")
+    for name, df in _tables_fn(first, tables).items():
+        writer = df.write.mode("overwrite")
+        if name == "gamma":
+            writer = writer.partitionBy("part")
+        writer.parquet(os.path.join(base, name))
 
 
-def _check(spark, base, model):
-    """Both subtables must contain exactly the model's batches —
-    mutually consistent (beta = alpha doubled), nothing lost, nothing
-    double-counted."""
-    a, b = _resolved_ids(spark, base)
-    want_a = sorted((i, i * 10) for i in model)
-    want_b = sorted((i, i * 20) for i in model)
-    assert a == want_a, f"alpha diverged: {a} != {want_a}"
-    assert b == want_b, f"beta diverged: {b} != {want_b}"
+def _check(spark, base, model, tables=TABLES):
+    """Every subtable must contain exactly the model's batches —
+    mutually consistent (each a multiple of alpha), nothing lost,
+    nothing double-counted."""
+    out = ledger.resolve_delta_tables(spark, base, tables)
+    for mult, name in enumerate(tables, 1):
+        rows = out[name].collect()
+        got = sorted((r.id, r.val) for r in rows)
+        want = sorted((i, i * 10 * mult) for i in model)
+        assert got == want, f"{name} diverged: {got} != {want}"
+        if name == "gamma":
+            assert all(r.part == r.id % 3 for r in rows)
 
 
-@pytest.mark.parametrize("seed", [7, 23, 101])
+@pytest.mark.parametrize(
+    "seed, tables",
+    [pytest.param(s, TABLES, id=str(s)) for s in (7, 23, 101)]
+    + [
+        pytest.param(s, PARTITIONED, id=f"{s}-partitioned")
+        for s in (7, 23, 101)
+    ],
+)
 def test_random_interleavings_never_lose_or_double_count(
-    spark, tmp_path, seed
+    spark, tmp_path, seed, tables
 ):
     rng = random.Random(seed)
     base = str(tmp_path / f"chaos_{seed}")
-    first = spark.createDataFrame([(0, 0)], "id long, val long")
-    for name, df in _tables_fn(first).items():
-        df.write.mode("overwrite").parquet(os.path.join(base, name))
+    _write_base(spark, base, tables)
     model = {0}
-    sink = ledger.delta_append_sink(base, _tables_fn)
+    sink = ledger.delta_append_sink(base, lambda df: _tables_fn(df, tables))
     next_id = 1
 
     def batch(i):
@@ -88,23 +107,27 @@ def test_random_interleavings_never_lose_or_double_count(
             model.add(next_id)
             next_id += 1
         elif op == "compact":
-            ledger.compact_delta_index(spark, base, TABLES)
+            ledger.compact_delta_index(spark, base, tables)
         elif op == "crash_precommit":
             # a compactor that died after materializing _new tables but
             # before the ledger commit: readers must ignore them and
             # the next compact must roll back then converge
-            for t in TABLES:
+            for t in tables:
                 new = os.path.join(base, f"{t}_new")
                 if os.path.isdir(new):
                     shutil.rmtree(new)
                 shutil.copytree(os.path.join(base, t), new)
                 ledger.write_folded_manifest(new, ["b999"])
-        _check(spark, base, model)
+        _check(spark, base, model, tables)
 
     # settle: a final compact folds whatever is left; invariants hold
-    ledger.compact_delta_index(spark, base, TABLES)
-    _check(spark, base, model)
+    ledger.compact_delta_index(spark, base, tables)
+    _check(spark, base, model, tables)
     assert not os.path.isdir(os.path.join(base, "delta"))
+    if "gamma" in tables:  # compaction kept the base partitioned
+        assert any(
+            d.startswith("part=") for d in os.listdir(os.path.join(base, "gamma"))
+        )
 
 
 @pytest.mark.parametrize("seed", [11, 47])
@@ -122,9 +145,7 @@ def test_two_appenders_disjoint_ids_one_compactor(spark, tmp_path, seed):
     lock provides per query, documented in ledger.py."""
     rng = random.Random(seed)
     base = str(tmp_path / f"two_writers_{seed}")
-    first = spark.createDataFrame([(0, 0)], "id long, val long")
-    for name, df in _tables_fn(first).items():
-        df.write.mode("overwrite").parquet(os.path.join(base, name))
+    _write_base(spark, base, TABLES)
     model = {0}
     # two independent sink instances — separate factory state, same
     # index directory (what two foreachBatch queries would hold)

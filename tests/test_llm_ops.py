@@ -683,12 +683,12 @@ def test_ivf_index_streaming_append_matches_single_shot(spark, tmp_path):
         x = np.array(row.embedding, dtype="float64")
         cell = int(((C - x) ** 2).sum(axis=1).argmin())
         expected[cell] = expected.get(cell, 0) + 1
-    delta_root = os.path.join(base, "postings_delta")
+    delta_root = os.path.join(base, "delta")
     got_counts = {}
     for d in os.listdir(delta_root):
-        for x in spark.read.parquet(os.path.join(delta_root, d)).groupBy(
-            "cell"
-        ).count().collect():
+        for x in spark.read.parquet(
+            os.path.join(delta_root, d, "postings")
+        ).groupBy("cell").count().collect():
             got_counts[x.cell] = got_counts.get(x.cell, 0) + x["count"]
     assert got_counts == expected
 
@@ -715,7 +715,7 @@ def test_ivf_index_compaction_preserves_search(spark, tmp_path):
         ).collect()
     )
     similarity.ivf_index_compact(spark, base)
-    assert not os.path.isdir(os.path.join(base, "postings_delta"))
+    assert not os.path.isdir(os.path.join(base, "delta"))
     after = sorted(
         tuple(x)
         for x in similarity.ivf_index_search(
@@ -744,7 +744,7 @@ def test_ivf_append_replay_after_compaction_is_noop(spark, tmp_path):
     sink(rest, 0)  # replay AFTER compaction: must be a no-op
     import os
 
-    assert not os.path.isdir(os.path.join(base, "postings_delta"))
+    assert not os.path.isdir(os.path.join(base, "delta"))
     assert spark.read.parquet(f"{base}/postings").count() == n
 
 
@@ -759,6 +759,26 @@ def test_ivf_index_search_plan_prunes_partitions(spark, tmp_path):
     df = similarity.ivf_index_search(q, base, k=5, n_probe=2, query_id="query_id")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower()
+
+
+def test_ivf_rejects_empty_cell_count_before_touching_the_index(
+    spark, tmp_path
+):
+    """n_centroids < 1 is refused at entry: a rebuild with it must not
+    overwrite the existing index (with no Lloyd round to fail first,
+    it used to reach the overwrite and fail inside an executor), and
+    the one-shot operators refuse it too."""
+    base = str(tmp_path / "ivf_guard")
+    e = catalog.load(spark, SF_DIR, "embeddings")
+    similarity.ivf_index_build(e, base, n_centroids=8)
+    q = e.filter(F.col("vec_id") < 20).withColumnRenamed("vec_id", "query_id")
+    before = _search_rows(spark, q, base)
+    with pytest.raises(ValueError, match="n_centroids"):
+        similarity.ivf_index_build(e, base, n_centroids=0, max_iter=0)
+    assert _search_rows(spark, q, base) == before and before
+    for op in (similarity.ivf_topk, similarity.ivfpq_topk):
+        with pytest.raises(ValueError, match="n_centroids"):
+            op(q, e, n_centroids=0)
 
 
 def _ivf_crash_fixture(spark, tmp_path, name):
@@ -800,7 +820,6 @@ def test_ivf_append_partial_delta_is_redone(spark, tmp_path):
     _SUCCESS; the replayed batch must re-apply (delete + rewrite), not
     no-op — otherwise those vectors silently vanish from the index."""
     import os
-    import shutil
 
     e = catalog.load(spark, SF_DIR, "embeddings")
     base = str(tmp_path / "ivf_partial")
@@ -813,12 +832,13 @@ def test_ivf_append_partial_delta_is_redone(spark, tmp_path):
     )
     sink = similarity.ivf_index_append(base)
     sink(rest, 0)
-    delta = os.path.join(base, "postings_delta", "b0")
+    delta = os.path.join(base, "delta", "b0")
     # simulate the crash: strip the commit marker, truncate contents
     os.remove(os.path.join(delta, "_SUCCESS"))
-    for d in os.listdir(delta):
-        if d.startswith("cell="):
-            shutil.rmtree(os.path.join(delta, d))
+    written = os.path.join(delta, "postings")
+    for f in os.listdir(written):
+        if f.startswith("part-"):
+            os.remove(os.path.join(written, f))
     # partial deltas are invisible to search (aborted write)...
     q = e.filter(F.col("vec_id") < 20).withColumnRenamed("vec_id", "query_id")
     half_only = _search_rows(spark, q, base)
@@ -827,7 +847,7 @@ def test_ivf_append_partial_delta_is_redone(spark, tmp_path):
     assert os.path.exists(os.path.join(delta, "_SUCCESS"))
     full = _search_rows(spark, q, base)
     assert full != half_only
-    appended = spark.read.parquet(delta).count()
+    appended = spark.read.parquet(written).count()
     assert appended == rest.count()
 
 
@@ -887,11 +907,11 @@ def test_ivf_compact_postcommit_crash_rolls_forward(spark, tmp_path):
     assert _search_rows(spark, q, base) == truth  # reads committed new
     # read path left the crash state intact for the writer to recover
     assert os.path.isdir(os.path.join(base, "postings_new"))
-    assert os.path.isdir(os.path.join(base, "postings_delta"))
+    assert os.path.isdir(os.path.join(base, "delta"))
     similarity.ivf_index_compact(spark, base)  # writer finishes the swap
     assert _search_rows(spark, q, base) == truth
     assert not os.path.isdir(os.path.join(base, "postings_new"))
-    assert not os.path.isdir(os.path.join(base, "postings_delta"))
+    assert not os.path.isdir(os.path.join(base, "delta"))
     assert spark.read.parquet(os.path.join(base, "postings")).count() == n_total
 
     # state 2: mid-swap — old base moved aside, new not yet in place
@@ -917,9 +937,9 @@ def test_ivf_compact_postcommit_crash_rolls_forward(spark, tmp_path):
     # search skip them and a re-run compact must not double-fold
     base3, q3, truth3 = _ivf_crash_fixture(spark, tmp_path, "ivf_postswap")
     delta_keep = str(tmp_path / "delta_copy")
-    shutil.copytree(os.path.join(base3, "postings_delta"), delta_keep)
+    shutil.copytree(os.path.join(base3, "delta"), delta_keep)
     similarity.ivf_index_compact(spark, base3)
-    shutil.copytree(delta_keep, os.path.join(base3, "postings_delta"))
+    shutil.copytree(delta_keep, os.path.join(base3, "delta"))
     assert _search_rows(spark, q3, base3) == truth3  # no double-count
     similarity.ivf_index_compact(spark, base3)  # no double-fold
     assert _search_rows(spark, q3, base3) == truth3
@@ -966,7 +986,7 @@ def test_ivf_compact_preserves_inflight_partial_delta(spark, tmp_path):
     import os
 
     base, q, truth = _ivf_crash_fixture(spark, tmp_path, "ivf_inflight")
-    delta_root = os.path.join(base, "postings_delta")
+    delta_root = os.path.join(base, "delta")
     # simulate an in-flight append: a delta dir without _SUCCESS
     partial = os.path.join(delta_root, "b7")
     os.makedirs(partial)

@@ -916,6 +916,53 @@ def test_index_probe_and_search_round_trips_are_pinned(spark, hot_indexes):
     assert not over, (over, trips)
 
 
+#: Spark jobs of one whole IVF operation on a warm index (sf0.001,
+#: local[8]); the same 2 / 4 / 1 before and after IVF moved onto the
+#: shared delta ledger: an append collects the centroids and writes its
+#: delta, a search collects in 4 jobs, a compaction is one write.
+_IVF_OP_JOB_CEILINGS = {"append": 2, "search": 4, "compact": 1}
+
+
+def test_ivf_whole_operation_jobs_are_pinned(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
+        catalog,
+    )
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
+        similarity,
+    )
+
+    ivf = str(tmp_path / "ivf")
+    vecs = catalog.load(spark, SF_DIR, "embeddings")
+    similarity.ivf_index_build(
+        vecs.filter(F.col("vec_id") < 400), ivf, n_centroids=8, max_iter=4
+    )
+
+    def batch(i):
+        lo = 400 + 50 * i
+        return vecs.filter(F.col("vec_id").between(lo, lo + 49)).select(
+            F.col("vec_id").alias("neighbor_id"),
+            similarity._as_double(F.col("embedding")).alias("cv"),
+        )
+
+    ops = {
+        "append": lambda i: similarity.ivf_index_append(ivf)(batch(i), i),
+        "search": lambda i: similarity.ivf_index_search(
+            vecs.filter(F.col("vec_id") < 20), ivf, k=5, n_probe=4
+        ).collect(),
+        "compact": lambda i: similarity.ivf_index_compact(spark, ivf),
+    }
+    for op in ops.values():
+        op(0)  # the first reads memoize the schemas
+    jobs = {
+        name: _build_jobs(spark, lambda op=op: op(1), f"ivf-{name}")
+        for name, op in ops.items()
+    }
+    over = {n: c for n, c in jobs.items() if c > _IVF_OP_JOB_CEILINGS[n]}
+    assert not over, (over, jobs)
+
+
 def test_index_rebuild_forgets_memoized_schema(spark, tmp_path):
     """A rebuild at the same base_dir with a new column type is read
     with the new type: *_index_build drops the memoized schemas."""
