@@ -13,11 +13,12 @@ package repeats against its own data (canonical tables via ``load``,
 persisted index tables, the DAG's fan-out output) goes through it. It
 memoizes ONE thing, the footer schema Spark reported on the first read,
 in ``_SCHEMA_MEMO``; every call still returns a fresh DataFrame. A
-persisted index table is keyed ``<abs base_dir>/<table>`` whichever
-physical directories (base, ``{table}_new``, deltas) a read resolves
-to, so base + deltas share one schema; each ``*_index_build`` calls
-``forget_schemas(base_dir)`` before it writes, so a rebuild with new
-column types is inferred again.
+persisted index table is keyed ``<abs generation root>/<table>``
+whichever physical directories (base, ``{table}_new``, deltas) a read
+resolves to, so base + deltas share one schema; a rebuild writes a new
+generation root (``operators/ledger.build``), so a rebuild with new
+column types is inferred again, and the ledger calls
+``forget_schemas`` on the generation it retires.
 """
 
 from __future__ import annotations
@@ -70,8 +71,9 @@ def read_parquet(
 
 def forget_schemas(base_dir: str) -> None:
     """Drop every memoized schema keyed at or under ``base_dir`` (in any
-    application) — called before an index is rewritten, so its next read
-    infers the new footer."""
+    application) — called before a directory is rewritten in place, so
+    its next read infers the new footer, and by ``operators/ledger``
+    when it retires an index generation."""
     root = os.path.abspath(base_dir)
     for memo_key in [
         k

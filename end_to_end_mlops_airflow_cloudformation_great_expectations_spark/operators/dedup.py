@@ -184,6 +184,30 @@ def _band_hashes_cols(bands: int, rows_per_band: int) -> Column:
     return F.expr(f"array({hashes})")
 
 
+def _check_bands(op: str, n_hashes: int, bands: int) -> None:
+    """Refuse a band count outside ``1..n_hashes`` before any persist or
+    write: 0 bands divides by zero and more bands than hashes leaves
+    bands with no hash to concatenate."""
+    if not 1 <= bands <= n_hashes:
+        raise ValueError(
+            f"{op}: bands must be in 1..n_hashes={n_hashes}, got {bands}"
+        )
+
+
+def _band_buckets(sh: DataFrame, id_col: str, n_hashes: int, bands: int):
+    """(id_col, band, bucket) LSH rows of the hashed-shingle arrays
+    ``sh`` (bands already checked by :func:`_check_bands`)."""
+    sig = _min_agg_signatures(
+        sh.select(id_col, F.explode("sh").alias("x")), id_col, n_hashes
+    )
+    return sig.select(
+        id_col,
+        F.posexplode(_band_hashes_cols(bands, n_hashes // bands)).alias(
+            "band", "bucket"
+        ),
+    )
+
+
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two array-set columns."""
     inter = F.size(F.array_intersect(a, b))
@@ -214,6 +238,7 @@ def minhash_neardup_pairs(
     min-aggregation (``_min_agg_signatures``) — the explode+agg shuffle
     is one 32-wide row per doc and measures ~1.8× faster than 32
     interpreted array_min(transform(...)) passes over the arrays."""
+    _check_bands("minhash_neardup_pairs", n_hashes, bands)
     fn = shingle_fn or (lambda c: char_shingles(c, k))
     from .. import catalog as _catalog
 
@@ -223,18 +248,7 @@ def minhash_neardup_pairs(
             F.col(id_col), hashed_shingles(fn(F.col(text_col))).alias("sh")
         )
     )
-
-    rows_per_band = n_hashes // bands
-    sig = _min_agg_signatures(
-        sh.select(F.col(id_col), F.explode("sh").alias("x")), id_col, n_hashes
-    )
-    buckets = sig.select(
-        id_col,
-        F.posexplode(_band_hashes_cols(bands, rows_per_band)).alias(
-            "band", "bucket"
-        ),
-    )
-    sized = buckets.withColumn(
+    sized = _band_buckets(sh, id_col, n_hashes, bands).withColumn(
         "bucket_n", F.count("*").over(Window.partitionBy("band", "bucket"))
     ).filter(F.col("bucket_n") <= 1000)
     cands = (
@@ -673,22 +687,14 @@ def minhash_index(
     Incremental maintenance is append-only: indexing a new batch is
     ``minhash_index(batch)`` unioned onto both tables — no global
     rebuild, no read-modify-write."""
+    _check_bands("minhash_index", n_hashes, bands)
     fn = shingle_fn or (lambda c: char_shingles(c, k))
-    rows_per_band = n_hashes // bands
     shingles = docs.select(
         F.col(id_col).alias("id"),
         hashed_shingles(fn(F.col(text_col))).alias("sh"),
     )
-    sig = _min_agg_signatures(
-        shingles.select("id", F.explode("sh").alias("x")), "id", n_hashes
-    )
-    postings = sig.select(
-        "id",
-        F.posexplode(_band_hashes_cols(bands, rows_per_band)).alias(
-            "band", "bucket"
-        ),
-    ).select("band", "bucket", "id")
-    return postings, shingles
+    postings = _band_buckets(shingles, "id", n_hashes, bands)
+    return postings.select("band", "bucket", "id"), shingles
 
 
 def minhash_dedup_incremental(
@@ -720,27 +726,15 @@ def minhash_dedup_incremental(
     maintain incrementally)."""
     from pyspark.sql import Window
 
+    _check_bands("minhash_dedup_incremental", n_hashes, bands)
     fn = shingle_fn or (lambda c: char_shingles(c, k))
-    rows_per_band = n_hashes // bands
     new_sh = _persist_tracked(
         new_docs.select(
             F.col(id_col).alias("new_id"),
             hashed_shingles(fn(F.col(text_col))).alias("sh"),
         )
     )
-    sig = _min_agg_signatures(
-        new_sh.select(
-            F.col("new_id").alias("id"), F.explode("sh").alias("x")
-        ),
-        "id",
-        n_hashes,
-    )
-    probe = sig.select(
-        F.col("id").alias("new_id"),
-        F.posexplode(_band_hashes_cols(bands, rows_per_band)).alias(
-            "band", "bucket"
-        ),
-    )
+    probe = _band_buckets(new_sh, "new_id", n_hashes, bands)
     sized = postings.withColumn(
         "bucket_n", F.count("*").over(Window.partitionBy("band", "bucket"))
     ).filter(F.col("bucket_n") <= max_bucket_size)
@@ -795,19 +789,20 @@ def minhash_index_build(
     bands: int = 8,
     shingle_fn=None,
 ) -> None:
-    """Materialize :func:`minhash_index` as the persisted on-disk index
-    ``{base_dir}/postings`` + ``{base_dir}/shingles`` — the durable
-    form the append/probe/compact lifecycle below maintains. One corpus
-    scan; both tables are narrow (3 longs per band per doc; one
-    long-array row per doc)."""
-    from .. import catalog
+    """Materialize :func:`minhash_index` as a new generation of the
+    persisted on-disk index at ``base_dir`` (tables ``postings`` +
+    ``shingles``, committed atomically by :func:`.ledger.build`) — the
+    durable form the append/probe/compact lifecycle below maintains.
+    One corpus scan; both tables are narrow (3 longs per band per doc;
+    one long-array row per doc)."""
+    from . import ledger
 
     postings, shingles = minhash_index(
         docs, id_col, text_col, k, n_hashes, bands, shingle_fn
     )
-    catalog.forget_schemas(base_dir)
-    postings.write.mode("overwrite").parquet(f"{base_dir}/postings")
-    shingles.write.mode("overwrite").parquet(f"{base_dir}/shingles")
+    with ledger.build(base_dir) as root:
+        postings.write.parquet(f"{root}/postings")
+        shingles.write.parquet(f"{root}/shingles")
 
 
 def minhash_index_append(
@@ -828,7 +823,9 @@ def minhash_index_append(
     after compaction)."""
     from . import ledger
 
-    def tables(batch_df: DataFrame) -> dict:
+    _check_bands("minhash_index_append", n_hashes, bands)
+
+    def tables(batch_df: DataFrame, root: str) -> dict:
         postings, shingles = minhash_index(
             batch_df, id_col, text_col, k, n_hashes, bands, shingle_fn
         )
@@ -865,6 +862,7 @@ def minhash_index_probe(
     Identical output before and after compaction (test- and
     driver-pinned): maintenance changes WHERE the postings live, never
     a result row."""
+    _check_bands("minhash_index_probe", n_hashes, bands)
     postings, shingles = _minhash_resolve(new_docs.sparkSession, base_dir)
     return minhash_dedup_incremental(
         new_docs,

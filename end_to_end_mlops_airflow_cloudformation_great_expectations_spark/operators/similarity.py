@@ -419,10 +419,11 @@ def ivf_index_build(
 ) -> None:
     """PERSIST an IVF index: the production form of ivf_topk, where
     the expensive parts — quantizer training and the full-corpus cell
-    assignment — happen ONCE at build time and land on disk:
+    assignment — happen ONCE at build time and land on disk as a new
+    generation ``root`` of the index (:func:`.ledger.build`):
 
-      {base_dir}/centroids   (cell, centroid)      n_centroids rows
-      {base_dir}/postings/   (neighbor_id, cv) PARTITIONED BY cell
+      {root}/centroids   (cell, centroid)      n_centroids rows
+      {root}/postings/   (neighbor_id, cv) PARTITIONED BY cell
 
     The postings are a cell-partitioned parquet layout, so a search
     that probes p cells reads exactly p directories — Spark's
@@ -446,15 +447,16 @@ def ivf_index_build(
     # cell-pure, which is what the probe's partition pruning reads.
     par = corpus.sparkSession.sparkContext.defaultParallelism
     from .. import catalog
+    from . import ledger
 
-    catalog.forget_schemas(base_dir)
-    assigned.repartition(par, "cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{base_dir}/postings")
     cent = [(i, [float(x) for x in C[i]]) for i in range(len(C))]
-    catalog.local_df(
-        corpus.sparkSession, cent, "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{base_dir}/centroids")
+    with ledger.build(base_dir) as root:
+        assigned.repartition(par, "cell").write.partitionBy("cell").parquet(
+            f"{root}/postings"
+        )
+        catalog.local_df(
+            corpus.sparkSession, cent, "cell int, centroid array<double>"
+        ).coalesce(1).write.parquet(f"{root}/centroids")
 
 
 def ivf_index_search(
@@ -479,12 +481,11 @@ def ivf_index_search(
     from . import ledger
 
     spark = queries.sparkSession
-    cent_df = catalog.read_parquet(spark, f"{base_dir}/centroids")
-    # read-only snapshot: the cell-partitioned base (probe-pruned) and
-    # one scan of the committed appends (ledger.resolve_delta_tables)
-    postings = ledger.resolve_delta_tables(spark, base_dir, _IVF_TABLES)[
-        "postings"
-    ]
+    root = ledger.current(base_dir)
+    cent_df = catalog.read_parquet(spark, f"{root}/centroids")
+    # read-only snapshot of the same generation: the cell-partitioned
+    # base (probe-pruned) and one scan of the committed appends
+    postings = ledger.read_generation(spark, root, _IVF_TABLES)["postings"]
     q = queries.select(
         F.col(query_id).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
@@ -533,22 +534,23 @@ def ivf_index_append(base_dir: str):
     from .. import catalog
     from . import ledger
 
-    # the stored centroids are immutable for an index lifetime (append
-    # never retrains): one bounded driver-side read per sink, not per
-    # micro-batch
+    # the stored centroids are immutable for a generation's lifetime
+    # (append never retrains): one bounded driver-side read per sink
+    # and generation, not per micro-batch
     cache: dict = {}
 
-    def tables_fn(batch_df: DataFrame) -> dict:
-        if "C" not in cache:
+    def tables_fn(batch_df: DataFrame, root: str) -> dict:
+        if root not in cache:
+            cache.clear()  # a rebuild retired the cached generation
             # n_centroids rows: sorted here, not by a Spark sort's jobs
             cent = catalog.read_parquet(
-                batch_df.sparkSession, f"{base_dir}/centroids"
+                batch_df.sparkSession, f"{root}/centroids"
             ).collect()
-            cache["C"] = np.array(
+            cache[root] = np.array(
                 [r["centroid"] for r in sorted(cent, key=lambda r: r["cell"])],
                 dtype="float64",
             )
-        assign = _cell_assign_udf(cache["C"])
+        assign = _cell_assign_udf(cache[root])
         return {"postings": batch_df.withColumn("cell", assign(F.col("cv")))}
 
     return ledger.delta_append_sink(base_dir, tables_fn)
@@ -1327,12 +1329,6 @@ def random_projection(
 _EMBDEDUP_TABLES = ("buckets", "vectors")
 
 
-def _embdedup_params_path(base_dir: str) -> str:
-    import os
-
-    return os.path.join(base_dir, "_PARAMS.json")
-
-
 def _embdedup_tables(
     vecs: DataFrame, n_planes: int, n_tables: int, seed: int,
     id_col: str, vec_col: str,
@@ -1361,31 +1357,21 @@ def embdedup_index_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the hyperplane-LSH dedup index of a corpus. The
-    hash parameters are written to ``_PARAMS.json`` so append/probe
-    regenerate the IDENTICAL planes (a mismatched probe would silently
-    miss every bucket — the index is self-describing instead)."""
-    import json
-
-    from .. import catalog
+    """Materialize the hyperplane-LSH dedup index of a corpus as a new
+    generation at ``base_dir`` (:func:`.ledger.build`: tables
+    ``buckets`` + ``vectors``). The hash parameters are recorded as the
+    generation's params so append/probe regenerate the IDENTICAL planes
+    (a mismatched probe would silently miss every bucket — the index is
+    self-describing instead)."""
+    from . import ledger
 
     t = _embdedup_tables(
         embeddings, n_planes, n_tables, seed, id_col, vec_col
     )
-    catalog.forget_schemas(base_dir)
-    t["buckets"].write.mode("overwrite").parquet(f"{base_dir}/buckets")
-    t["vectors"].write.mode("overwrite").parquet(f"{base_dir}/vectors")
-    with open(_embdedup_params_path(base_dir), "w") as fh:
-        json.dump(
-            {"n_planes": n_planes, "n_tables": n_tables, "seed": seed}, fh
-        )
-
-
-def _embdedup_params(base_dir: str) -> dict:
-    import json
-
-    with open(_embdedup_params_path(base_dir)) as fh:
-        return json.load(fh)
+    params = {"n_planes": n_planes, "n_tables": n_tables, "seed": seed}
+    with ledger.build(base_dir, params) as root:
+        t["buckets"].write.parquet(f"{root}/buckets")
+        t["vectors"].write.parquet(f"{root}/vectors")
 
 
 def embdedup_index_append(
@@ -1396,14 +1382,13 @@ def embdedup_index_append(
     (shared protocol — :func:`.ledger.delta_append_sink`)."""
     from . import ledger
 
-    p = _embdedup_params(base_dir)
-
-    return ledger.delta_append_sink(
-        base_dir,
-        lambda batch: _embdedup_tables(
+    def tables_fn(batch: DataFrame, root: str) -> dict:
+        p = ledger.read_params(root)
+        return _embdedup_tables(
             batch, p["n_planes"], p["n_tables"], p["seed"], id_col, vec_col
-        ),
-    )
+        )
+
+    return ledger.delta_append_sink(base_dir, tables_fn)
 
 
 def embdedup_index_probe(
@@ -1426,9 +1411,9 @@ def embdedup_index_probe(
     bucket table."""
     from . import ledger
 
-    spark = new_vecs.sparkSession
-    p = _embdedup_params(base_dir)
-    t = ledger.resolve_delta_tables(spark, base_dir, _EMBDEDUP_TABLES)
+    root = ledger.current(base_dir)
+    p = ledger.read_params(root)
+    t = ledger.read_generation(new_vecs.sparkSession, root, _EMBDEDUP_TABLES)
     new_t = _embdedup_tables(
         new_vecs, p["n_planes"], p["n_tables"], p["seed"], id_col, vec_col
     )
@@ -1784,12 +1769,6 @@ def graph_greedy_search(
 _HNSW_TABLES = ("edges", "vectors")
 
 
-def _hnsw_params_path(base_dir: str) -> str:
-    import os
-
-    return os.path.join(base_dir, "_PARAMS.json")
-
-
 def hnsw_index_build(
     embeddings: DataFrame,
     base_dir: str,
@@ -1806,14 +1785,13 @@ def hnsw_index_build(
     """Materialize the neighbor graph + vector store of a corpus as a
     persisted SERVING index (the graph-ANN sibling of the IVF index):
     edges from :func:`neighbor_graph_build`, vectors alongside (the
-    search's point lookups), and the build/search parameters in
-    ``_PARAMS.json`` so appends and searches are self-describing —
-    a mismatched beam/entry config would silently change results; the
-    index pins its own."""
-    import json
-    import os
-
-    from .. import catalog
+    search's point lookups), written as a new generation at
+    ``base_dir`` (:func:`.ledger.build`: tables ``edges`` +
+    ``vectors``) with the build/search parameters as its params so
+    appends and searches are self-describing — a mismatched
+    beam/entry config would silently change results; the index pins
+    its own."""
+    from . import ledger
 
     edges = neighbor_graph_build(
         embeddings, m, n_planes, n_tables, id_col, vec_col, seed
@@ -1821,29 +1799,18 @@ def hnsw_index_build(
     vectors = embeddings.select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
     )
-    catalog.forget_schemas(base_dir)
-    edges.write.mode("overwrite").parquet(os.path.join(base_dir, "edges"))
-    vectors.write.mode("overwrite").parquet(os.path.join(base_dir, "vectors"))
-    with open(_hnsw_params_path(base_dir), "w") as fh:
-        json.dump(
-            {
-                "m": m,
-                "n_planes": n_planes,
-                "n_tables": n_tables,
-                "seed": seed,
-                "n_entry": n_entry,
-                "beam": beam,
-                "rounds": rounds,
-            },
-            fh,
-        )
-
-
-def _hnsw_params(base_dir: str) -> dict:
-    import json
-
-    with open(_hnsw_params_path(base_dir)) as fh:
-        return json.load(fh)
+    params = {
+        "m": m,
+        "n_planes": n_planes,
+        "n_tables": n_tables,
+        "seed": seed,
+        "n_entry": n_entry,
+        "beam": beam,
+        "rounds": rounds,
+    }
+    with ledger.build(base_dir, params) as root:
+        edges.write.parquet(f"{root}/edges")
+        vectors.write.parquet(f"{root}/vectors")
 
 
 def hnsw_index_search(
@@ -1860,8 +1827,9 @@ def hnsw_index_search(
     vector ids — stable across appends because appended ids are new."""
     from . import ledger
 
-    p = _hnsw_params(base_dir)
-    t = ledger.resolve_delta_tables(spark, base_dir, _HNSW_TABLES)
+    root = ledger.current(base_dir)
+    p = ledger.read_params(root)
+    t = ledger.read_generation(spark, root, _HNSW_TABLES)
     return graph_greedy_search(
         t["edges"],
         t["vectors"],
@@ -1898,11 +1866,9 @@ def hnsw_index_append(
     neighbor_graph_build, omitted to keep appends O(batch·search)."""
     from . import ledger
 
-    p = _hnsw_params(base_dir)
-
-    def tables_fn(batch: DataFrame) -> dict:
-        spark = batch.sparkSession
-        t = ledger.resolve_delta_tables(spark, base_dir, _HNSW_TABLES)
+    def tables_fn(batch: DataFrame, root: str) -> dict:
+        p = ledger.read_params(root)
+        t = ledger.read_generation(batch.sparkSession, root, _HNSW_TABLES)
         q = batch.select(
             F.col(id_col).alias("query_id"),
             _as_double(F.col(vec_col)).alias("qv"),

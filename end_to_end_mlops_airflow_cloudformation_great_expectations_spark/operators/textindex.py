@@ -23,10 +23,11 @@ from-scratch ``text_bm25`` computation exactly (same oracle string —
 the registered ``text_bm25_indexed`` query is hash-checked against
 it).
 
-Incremental maintenance is the shared protocol: streaming appends land
-as committed delta directories, reads resolve base + committed deltas
-without mutating anything, and compaction folds deltas under one
-atomic ledger commit with tombstoned batch ids.
+Incremental maintenance is the shared protocol: a build commits a new
+generation atomically, streaming appends land as committed delta
+directories, reads resolve base + committed deltas without mutating
+anything, and compaction folds deltas under one atomic ledger commit
+with tombstoned batch ids.
 """
 
 from __future__ import annotations
@@ -65,18 +66,17 @@ def bm25_index_build(
     text_col: str = "text",
     n_files: int = 8,
 ) -> None:
-    """Materialize the full-vocabulary index: one token-stream shuffle
-    (the cost a per-query scan pays EVERY time), written term-clustered
-    so query-time term filters prune row-groups via parquet min/max
-    stats instead of reading the whole posting file."""
-    from .. import catalog
-
+    """Materialize the full-vocabulary index as a new generation at
+    ``base_dir`` (:func:`.ledger.build`): one token-stream shuffle (the
+    cost a per-query scan pays EVERY time), ``postings`` written
+    term-clustered so query-time term filters prune row-groups via
+    parquet min/max stats instead of reading the whole posting file."""
     t = _bm25_tables(docs, id_col, text_col)
-    catalog.forget_schemas(base_dir)
-    t["postings"].repartition(n_files, "term").sortWithinPartitions(
-        "term"
-    ).write.mode("overwrite").parquet(f"{base_dir}/postings")
-    t["doclens"].write.mode("overwrite").parquet(f"{base_dir}/doclens")
+    with ledger.build(base_dir) as root:
+        t["postings"].repartition(n_files, "term").sortWithinPartitions(
+            "term"
+        ).write.parquet(f"{root}/postings")
+        t["doclens"].write.parquet(f"{root}/doclens")
 
 
 def bm25_index_append(
@@ -89,7 +89,7 @@ def bm25_index_append(
     global stats never go stale because none are stored — df/N/avgdl
     derive from the resolved tables at query time."""
     return ledger.delta_append_sink(
-        base_dir, lambda batch: _bm25_tables(batch, id_col, text_col)
+        base_dir, lambda batch, root: _bm25_tables(batch, id_col, text_col)
     )
 
 

@@ -405,6 +405,33 @@ def _snapshot_guard(base_dir: str, batch_id: int):
     return versions, f"v{batch_id}" in versions
 
 
+def _versioned_snapshot_sink(base_dir: str, merge):
+    """foreachBatch sink over a versioned parquet snapshot: each batch
+    writes ``merge(cur, batch_df)`` as version ``v{batch_id}``, where
+    ``cur`` is the latest committed version (None before the first);
+    a replayed batch is skipped (:func:`_snapshot_guard`) and older
+    versions are pruned to the latest two."""
+    import os
+    import shutil
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        versions, replayed = _snapshot_guard(base_dir, batch_id)
+        if replayed:
+            return
+        cur = None
+        if versions:
+            cur = batch_df.sparkSession.read.parquet(
+                os.path.join(base_dir, versions[-1])
+            )
+        merge(cur, batch_df).write.mode("overwrite").parquet(
+            os.path.join(base_dir, f"v{batch_id}")
+        )
+        for stale in versions[:-1]:
+            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
+
+    return apply
+
+
 def merge_upsert_sink(base_dir: str, key: str, order_col: str, tiebreak: str):
     """foreachBatch MERGE-upsert into a versioned parquet snapshot —
     the j_cdc_merge pattern driven incrementally, for sinks without a
@@ -422,33 +449,19 @@ def merge_upsert_sink(base_dir: str, key: str, order_col: str, tiebreak: str):
     manifest/catalog entry instead. Old versions are pruned to the
     latest two so a bounded-storage contract holds at any stream
     length."""
-    import os
-    import shutil
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions, replayed = _snapshot_guard(base_dir, batch_id)
-        if replayed:
-            return
-        union = batch_df
-        if versions:
-            cur = spark.read.parquet(os.path.join(base_dir, versions[-1]))
-            union = cur.unionByName(batch_df)
+    def merge(cur, batch_df: DataFrame) -> DataFrame:
+        union = batch_df if cur is None else cur.unionByName(batch_df)
         w = Window.partitionBy(key).orderBy(
             F.desc(order_col), F.desc(tiebreak)
         )
-        latest = (
+        return (
             union.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        latest.write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"v{batch_id}")
-        )
-        for stale in versions[:-1]:
-            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
 
-    return apply
+    return _versioned_snapshot_sink(base_dir, merge)
 
 
 def run_merge_upsert(
@@ -483,32 +496,20 @@ def sketch_rollup_sink(base_dir: str, group_col: str, id_col: str):
     any moment without ever re-scanning history. Contrast with exact
     streaming countDistinct, whose state grows with the id universe.
     Same versioned-snapshot layout as merge_upsert_sink."""
-    import os
-    import shutil
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions, replayed = _snapshot_guard(base_dir, batch_id)
-        if replayed:
-            return
+    def merge(cur, batch_df: DataFrame) -> DataFrame:
         new = batch_df.groupBy(group_col).agg(
             F.hll_sketch_agg(id_col).alias("hll")
         )
-        merged = new
-        if versions:
-            cur = spark.read.parquet(os.path.join(base_dir, versions[-1]))
-            merged = (
-                cur.unionByName(new)
-                .groupBy(group_col)
-                .agg(F.hll_union_agg("hll").alias("hll"))
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"v{batch_id}")
+        if cur is None:
+            return new
+        return (
+            cur.unionByName(new)
+            .groupBy(group_col)
+            .agg(F.hll_union_agg("hll").alias("hll"))
         )
-        for stale in versions[:-1]:
-            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
 
-    return apply
+    return _versioned_snapshot_sink(base_dir, merge)
 
 
 def run_sketch_rollup(
@@ -543,32 +544,15 @@ def moment_stats_sink(base_dir: str, vec_col: str = "embedding"):
     query computes over the full corpus (equality-at-the-band pinned
     in tests/test_streaming_advanced.py). Same versioned-snapshot
     layout as merge_upsert_sink / sketch_rollup_sink."""
-    import os
-    import shutil
-
     from ..operators.linalg import moment_partials
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions, replayed = _snapshot_guard(base_dir, batch_id)
-        if replayed:
-            return
+    def merge(cur, batch_df: DataFrame) -> DataFrame:
         new = moment_partials(batch_df, vec_col)
-        merged = new
-        if versions:
-            cur = spark.read.parquet(os.path.join(base_dir, versions[-1]))
-            merged = (
-                cur.unionByName(new)
-                .groupBy("i", "j")
-                .agg(F.sum("s").alias("s"))
-            )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"v{batch_id}")
-        )
-        for stale in versions[:-1]:
-            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
+        if cur is None:
+            return new
+        return cur.unionByName(new).groupBy("i", "j").agg(F.sum("s").alias("s"))
 
-    return apply
+    return _versioned_snapshot_sink(base_dir, merge)
 
 
 def quantile_sketch_sink(base_dir: str, value_col: str):
@@ -589,34 +573,22 @@ def quantile_sketch_sink(base_dir: str, value_col: str):
     exactly-once witness: a dropped or double-applied batch shows up
     as an integer mismatch, not a within-band wiggle. Same versioned
     layout + _snapshot_guard replay protection as the other sinks."""
-    import os
-    import shutil
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions, replayed = _snapshot_guard(base_dir, batch_id)
-        if replayed:
-            return
-        new = batch_df.agg(
+    def merge(cur, batch_df: DataFrame) -> DataFrame:
+        merged = batch_df.agg(
             F.kll_sketch_agg_double(F.col(value_col).cast("double")).alias(
                 "kll"
             )
         )
-        merged = new
-        if versions:
-            cur = spark.read.parquet(os.path.join(base_dir, versions[-1]))
-            merged = cur.select("kll").unionByName(new).agg(
+        if cur is not None:
+            merged = cur.select("kll").unionByName(merged).agg(
                 F.kll_merge_agg_double("kll").alias("kll")
             )
-        merged.select(
+        return merged.select(
             "kll", F.kll_sketch_get_n_double("kll").alias("n")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"v{batch_id}")
-        )
-        for stale in versions[:-1]:
-            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
+        ).coalesce(1)
 
-    return apply
+    return _versioned_snapshot_sink(base_dir, merge)
 
 
 def run_quantile_sketch(
@@ -686,17 +658,10 @@ def cms_cells_sink(
     snapshot. Same versioned layout + _snapshot_guard replay
     protection as the other sinks; the sum merge is NOT idempotent,
     hence the guard (and a durable checkpoint for restarts)."""
-    import os
-    import shutil
-
     from ..functions.columns import portable_bucket
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions, replayed = _snapshot_guard(base_dir, batch_id)
-        if replayed:
-            return
-        new = (
+    def merge(cur, batch_df: DataFrame) -> DataFrame:
+        merged = (
             batch_df.select(
                 F.posexplode(
                     F.array(
@@ -712,21 +677,15 @@ def cms_cells_sink(
             .groupBy("j", "bucket")
             .agg(F.count("*").alias("c"))
         )
-        merged = new
-        if versions:
-            cur = spark.read.parquet(os.path.join(base_dir, versions[-1]))
+        if cur is not None:
             merged = (
-                cur.unionByName(new)
+                cur.unionByName(merged)
                 .groupBy("j", "bucket")
                 .agg(F.sum("c").alias("c"))
             )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"v{batch_id}")
-        )
-        for stale in versions[:-1]:
-            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
+        return merged.coalesce(1)
 
-    return apply
+    return _versioned_snapshot_sink(base_dir, merge)
 
 
 def key_counts_sink(base_dir: str, key_col: str):
@@ -744,30 +703,18 @@ def key_counts_sink(base_dir: str, key_col: str):
     layout + _snapshot_guard replay protection as the other sinks;
     the sum merge is NOT idempotent, hence the guard (and a durable
     checkpoint for restarts)."""
-    import os
-    import shutil
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions, replayed = _snapshot_guard(base_dir, batch_id)
-        if replayed:
-            return
-        new = batch_df.groupBy(F.col(key_col).alias("k")).agg(
+    def merge(cur, batch_df: DataFrame) -> DataFrame:
+        merged = batch_df.groupBy(F.col(key_col).alias("k")).agg(
             F.count("*").alias("c")
         )
-        merged = new
-        if versions:
-            cur = spark.read.parquet(os.path.join(base_dir, versions[-1]))
+        if cur is not None:
             merged = (
-                cur.unionByName(new).groupBy("k").agg(F.sum("c").alias("c"))
+                cur.unionByName(merged).groupBy("k").agg(F.sum("c").alias("c"))
             )
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base_dir, f"v{batch_id}")
-        )
-        for stale in versions[:-1]:
-            shutil.rmtree(os.path.join(base_dir, stale), ignore_errors=True)
+        return merged.coalesce(1)
 
-    return apply
+    return _versioned_snapshot_sink(base_dir, merge)
 
 
 def run_key_counts(

@@ -4,6 +4,10 @@ shuffle exchanges — the 100 TB answer to repeated fact-fact joins."""
 
 from __future__ import annotations
 
+import os
+import shutil
+from urllib.parse import urlparse
+
 from pyspark.sql import functions as F
 
 from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import catalog
@@ -12,13 +16,23 @@ from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.plans impo
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+TABLES = ("li_bucketed", "o_bucketed")
+
+
+def _drop_tables(spark):
+    """Drop both tables AND their warehouse locations: a run killed
+    mid-test leaves a location DROP TABLE does not remove, and the next
+    saveAsTable fails with LOCATION_ALREADY_EXISTS."""
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for name in TABLES:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
 
 
 def test_bucketed_join_has_no_shuffle(spark):
     li = catalog.load(spark, SF_DIR, "lineitem")
     o = catalog.load(spark, SF_DIR, "orders")
-    spark.sql("DROP TABLE IF EXISTS li_bucketed")
-    spark.sql("DROP TABLE IF EXISTS o_bucketed")
+    _drop_tables(spark)
     try:
         (
             li.write.bucketBy(8, "l_orderkey")
@@ -51,5 +65,4 @@ def test_bucketed_join_has_no_shuffle(spark):
             map(tuple, want.collect())
         )
     finally:
-        spark.sql("DROP TABLE IF EXISTS li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS o_bucketed")
+        _drop_tables(spark)

@@ -1,8 +1,8 @@
 """Randomized-interleaving test of the shared delta-index protocol
 (operators/ledger.py): drive a minimal two-table index through random
 sequences of appends, replays, aborted (partial) appends, compactions,
-and manufactured crash states, checking after EVERY step that the
-read-only resolution equals a python reference model. The enumerated
+rebuilds and manufactured crash states, checking after EVERY step that
+the read-only resolution equals a python reference model. The enumerated
 crash-state tests (test_minhash_index.py, test_llm_ops.py) pin each
 transition once; this pins that arbitrary compositions of them can
 never double-count, lose, or half-apply a batch."""
@@ -40,13 +40,22 @@ def _tables_fn(batch_df, tables=TABLES):
     return out
 
 
-def _write_base(spark, base, tables):
+class _Crash(Exception):
+    pass
+
+
+def _write_base(spark, base, tables, crash=False):
+    """Build a generation holding only row 0; ``crash`` dies right
+    after the first table is written."""
     first = spark.createDataFrame([(0, 0)], "id long, val long")
-    for name, df in _tables_fn(first, tables).items():
-        writer = df.write.mode("overwrite")
-        if name == "gamma":
-            writer = writer.partitionBy("part")
-        writer.parquet(os.path.join(base, name))
+    with ledger.build(base) as root:
+        for name, df in _tables_fn(first, tables).items():
+            writer = df.write
+            if name == "gamma":
+                writer = writer.partitionBy("part")
+            writer.parquet(os.path.join(root, name))
+            if crash:
+                raise _Crash
 
 
 def _check(spark, base, model, tables=TABLES):
@@ -78,7 +87,9 @@ def test_random_interleavings_never_lose_or_double_count(
     base = str(tmp_path / f"chaos_{seed}")
     _write_base(spark, base, tables)
     model = {0}
-    sink = ledger.delta_append_sink(base, lambda df: _tables_fn(df, tables))
+    sink = ledger.delta_append_sink(
+        base, lambda df, root: _tables_fn(df, tables)
+    )
     next_id = 1
 
     def batch(i):
@@ -86,8 +97,17 @@ def test_random_interleavings_never_lose_or_double_count(
 
     for _ in range(14):
         op = rng.choice(
-            ["append", "replay", "partial", "compact", "crash_precommit"]
+            [
+                "append",
+                "replay",
+                "partial",
+                "compact",
+                "crash_precommit",
+                "rebuild",
+                "crash_midbuild",
+            ]
         )
+        root = ledger.current(base)
         if op == "append":
             sink(batch(next_id), next_id)
             model.add(next_id)
@@ -100,7 +120,7 @@ def test_random_interleavings_never_lose_or_double_count(
                 sink(batch(i), i)
         elif op == "partial":
             # an append that crashed mid-write: delta dir, no marker
-            d = os.path.join(base, "delta", f"b{next_id}")
+            d = os.path.join(root, "delta", f"b{next_id}")
             os.makedirs(os.path.join(d, "alpha"), exist_ok=True)
             # replay completes it (the sink overwrites the aborted dir)
             sink(batch(next_id), next_id)
@@ -113,20 +133,35 @@ def test_random_interleavings_never_lose_or_double_count(
             # before the ledger commit: readers must ignore them and
             # the next compact must roll back then converge
             for t in tables:
-                new = os.path.join(base, f"{t}_new")
+                new = os.path.join(root, f"{t}_new")
                 if os.path.isdir(new):
                     shutil.rmtree(new)
-                shutil.copytree(os.path.join(base, t), new)
+                shutil.copytree(os.path.join(root, t), new)
                 ledger.write_folded_manifest(new, ["b999"])
+        elif op == "rebuild":
+            # a new generation over row 0 alone retires every delta and
+            # the ledger: ids the old generation folded must land again
+            _write_base(spark, base, tables)
+            model = {0}
+            next_id = 1
+        elif op == "crash_midbuild":
+            # a build that dies after its first table leaves the live
+            # generation untouched and no staged one behind
+            with pytest.raises(_Crash):
+                _write_base(spark, base, tables, crash=True)
+            assert [d for d in os.listdir(base) if d.startswith("g")] == [
+                os.path.basename(root)
+            ]
         _check(spark, base, model, tables)
 
     # settle: a final compact folds whatever is left; invariants hold
     ledger.compact_delta_index(spark, base, tables)
     _check(spark, base, model, tables)
-    assert not os.path.isdir(os.path.join(base, "delta"))
+    root = ledger.current(base)
+    assert not os.path.isdir(os.path.join(root, "delta"))
     if "gamma" in tables:  # compaction kept the base partitioned
         assert any(
-            d.startswith("part=") for d in os.listdir(os.path.join(base, "gamma"))
+            d.startswith("part=") for d in os.listdir(os.path.join(root, "gamma"))
         )
 
 
@@ -149,13 +184,14 @@ def test_two_appenders_disjoint_ids_one_compactor(spark, tmp_path, seed):
     model = {0}
     # two independent sink instances — separate factory state, same
     # index directory (what two foreachBatch queries would hold)
-    sink_a = ledger.delta_append_sink(base, _tables_fn)
-    sink_b = ledger.delta_append_sink(base, _tables_fn)
+    sink_a = ledger.delta_append_sink(base, lambda df, root: _tables_fn(df))
+    sink_b = ledger.delta_append_sink(base, lambda df, root: _tables_fn(df))
     next_a, next_b = 2, 1  # A: even ids, B: odd ids
 
     def batch(i):
         return spark.createDataFrame([(i, i * 10)], "id long, val long")
 
+    root = ledger.current(base)
     for _ in range(16):
         op = rng.choice(
             ["a_append", "b_append", "a_replay", "b_partial",
@@ -176,7 +212,7 @@ def test_two_appenders_disjoint_ids_one_compactor(spark, tmp_path, seed):
                 sink_a(batch(i), i)  # must no-op, folded or live
         elif op == "b_partial":
             # B crashes mid-append, then its replay completes it
-            d = os.path.join(base, "delta", f"b{next_b}")
+            d = os.path.join(root, "delta", f"b{next_b}")
             os.makedirs(os.path.join(d, "alpha"), exist_ok=True)
             sink_b(batch(next_b), next_b)
             model.add(next_b)
@@ -187,11 +223,11 @@ def test_two_appenders_disjoint_ids_one_compactor(spark, tmp_path, seed):
             # A is mid-append (delta dir exists, no _SUCCESS yet) when
             # the compactor runs: the unmarked dir must survive, NOT
             # fold, and A's completion afterwards must commit it
-            d = os.path.join(base, "delta", f"b{next_a}")
+            d = os.path.join(root, "delta", f"b{next_a}")
             os.makedirs(os.path.join(d, "alpha"), exist_ok=True)
             ledger.compact_delta_index(spark, base, TABLES)
             assert os.path.isdir(d), "compactor deleted in-flight append"
-            assert f"b{next_a}" not in ledger.read_ledger(base)
+            assert f"b{next_a}" not in ledger.read_ledger(root)
             sink_a(batch(next_a), next_a)
             model.add(next_a)
             next_a += 2

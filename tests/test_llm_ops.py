@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import catalog
 from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
     dedup,
+    ledger,
     multimodal,
     similarity,
 )
@@ -610,7 +611,8 @@ def test_ivf_persisted_index_search_equals_direct(spark, tmp_path):
     similarity.ivf_index_build(e, base, n_centroids=8)
 
     # cell-partitioned layout on disk = file-level probe pruning
-    cells = [d for d in os.listdir(f"{base}/postings") if d.startswith("cell=")]
+    postings = os.path.join(ledger.current(base), "postings")
+    cells = [d for d in os.listdir(postings) if d.startswith("cell=")]
     assert len(cells) == 8
 
     q = e.filter(F.col("vec_id") < 20).withColumnRenamed("vec_id", "query_id")
@@ -675,7 +677,8 @@ def test_ivf_index_streaming_append_matches_single_shot(spark, tmp_path):
     assert got == want and len(got) > 0
 
     # appended postings == numpy assignment with the STORED centroids
-    cent = spark.read.parquet(f"{base}/centroids").orderBy("cell").collect()
+    root = ledger.current(base)
+    cent = spark.read.parquet(f"{root}/centroids").orderBy("cell").collect()
     C = np.array([x["centroid"] for x in cent])
     rest_rows = rest.select("vec_id", "embedding").collect()
     expected = {}
@@ -683,7 +686,7 @@ def test_ivf_index_streaming_append_matches_single_shot(spark, tmp_path):
         x = np.array(row.embedding, dtype="float64")
         cell = int(((C - x) ** 2).sum(axis=1).argmin())
         expected[cell] = expected.get(cell, 0) + 1
-    delta_root = os.path.join(base, "delta")
+    delta_root = os.path.join(root, "delta")
     got_counts = {}
     for d in os.listdir(delta_root):
         for x in spark.read.parquet(
@@ -715,7 +718,7 @@ def test_ivf_index_compaction_preserves_search(spark, tmp_path):
         ).collect()
     )
     similarity.ivf_index_compact(spark, base)
-    assert not os.path.isdir(os.path.join(base, "delta"))
+    assert not os.path.isdir(os.path.join(ledger.current(base), "delta"))
     after = sorted(
         tuple(x)
         for x in similarity.ivf_index_search(
@@ -739,13 +742,14 @@ def test_ivf_append_replay_after_compaction_is_noop(spark, tmp_path):
     sink = similarity.ivf_index_append(base)
     sink(rest, 0)
     similarity.ivf_index_compact(spark, base)
-    n = spark.read.parquet(f"{base}/postings").count()
+    root = ledger.current(base)
+    n = spark.read.parquet(f"{root}/postings").count()
     assert n == e.count()
     sink(rest, 0)  # replay AFTER compaction: must be a no-op
     import os
 
-    assert not os.path.isdir(os.path.join(base, "delta"))
-    assert spark.read.parquet(f"{base}/postings").count() == n
+    assert not os.path.isdir(os.path.join(root, "delta"))
+    assert spark.read.parquet(f"{root}/postings").count() == n
 
 
 def test_ivf_index_search_plan_prunes_partitions(spark, tmp_path):
@@ -832,7 +836,7 @@ def test_ivf_append_partial_delta_is_redone(spark, tmp_path):
     )
     sink = similarity.ivf_index_append(base)
     sink(rest, 0)
-    delta = os.path.join(base, "delta", "b0")
+    delta = os.path.join(ledger.current(base), "delta", "b0")
     # simulate the crash: strip the commit marker, truncate contents
     os.remove(os.path.join(delta, "_SUCCESS"))
     written = os.path.join(delta, "postings")
@@ -867,17 +871,19 @@ def test_ivf_compact_precommit_crash_rolls_back(spark, tmp_path):
     twin = str(tmp_path / "ivf_precommit_twin")
     shutil.copytree(base, twin)
     similarity.ivf_index_compact(spark, twin)
+    root = ledger.current(base)
     shutil.copytree(
-        os.path.join(twin, "postings"), os.path.join(base, "postings_new")
+        os.path.join(ledger.current(twin), "postings"),
+        os.path.join(root, "postings_new"),
     )
-    assert not os.path.isfile(os.path.join(base, "compacted_deltas.txt"))
+    assert not os.path.isfile(os.path.join(root, "compacted_deltas.txt"))
     assert _search_rows(spark, q, base) == truth  # uncommitted new ignored
     # read path is READ-ONLY: the in-flight/crashed postings_new survives
-    assert os.path.isdir(os.path.join(base, "postings_new"))
+    assert os.path.isdir(os.path.join(root, "postings_new"))
     similarity.ivf_index_compact(spark, base)  # writer recovery rolls back
-    assert not os.path.isdir(os.path.join(base, "postings_new"))
+    assert not os.path.isdir(os.path.join(root, "postings_new"))
     assert _search_rows(spark, q, base) == truth
-    assert spark.read.parquet(os.path.join(base, "postings")).count() == (
+    assert spark.read.parquet(os.path.join(root, "postings")).count() == (
         catalog.load(spark, SF_DIR, "embeddings").count()
     )
 
@@ -899,51 +905,56 @@ def test_ivf_compact_postcommit_crash_rolls_forward(spark, tmp_path):
     twin = str(tmp_path / "ivf_postcommit_twin")
     shutil.copytree(base, twin)
     similarity.ivf_index_compact(spark, twin)
+    root = ledger.current(base)
     shutil.copytree(
-        os.path.join(twin, "postings"), os.path.join(base, "postings_new")
+        os.path.join(ledger.current(twin), "postings"),
+        os.path.join(root, "postings_new"),
     )
-    with open(os.path.join(base, "compacted_deltas.txt"), "w") as fh:
+    with open(os.path.join(root, "compacted_deltas.txt"), "w") as fh:
         fh.write("b0\n")
     assert _search_rows(spark, q, base) == truth  # reads committed new
     # read path left the crash state intact for the writer to recover
-    assert os.path.isdir(os.path.join(base, "postings_new"))
-    assert os.path.isdir(os.path.join(base, "delta"))
+    assert os.path.isdir(os.path.join(root, "postings_new"))
+    assert os.path.isdir(os.path.join(root, "delta"))
     similarity.ivf_index_compact(spark, base)  # writer finishes the swap
     assert _search_rows(spark, q, base) == truth
-    assert not os.path.isdir(os.path.join(base, "postings_new"))
-    assert not os.path.isdir(os.path.join(base, "delta"))
-    assert spark.read.parquet(os.path.join(base, "postings")).count() == n_total
+    assert not os.path.isdir(os.path.join(root, "postings_new"))
+    assert not os.path.isdir(os.path.join(root, "delta"))
+    assert spark.read.parquet(os.path.join(root, "postings")).count() == n_total
 
     # state 2: mid-swap — old base moved aside, new not yet in place
     base2, q2, truth2 = _ivf_crash_fixture(spark, tmp_path, "ivf_midswap")
     twin2 = str(tmp_path / "ivf_midswap_twin")
     shutil.copytree(base2, twin2)
     similarity.ivf_index_compact(spark, twin2)
+    root2 = ledger.current(base2)
     shutil.copytree(
-        os.path.join(twin2, "postings"), os.path.join(base2, "postings_new")
+        os.path.join(ledger.current(twin2), "postings"),
+        os.path.join(root2, "postings_new"),
     )
-    with open(os.path.join(base2, "compacted_deltas.txt"), "w") as fh:
+    with open(os.path.join(root2, "compacted_deltas.txt"), "w") as fh:
         fh.write("b0\n")
     os.rename(
-        os.path.join(base2, "postings"), os.path.join(base2, "postings_old")
+        os.path.join(root2, "postings"), os.path.join(root2, "postings_old")
     )
     assert _search_rows(spark, q2, base2) == truth2  # still read-only
-    assert os.path.isdir(os.path.join(base2, "postings_old"))
+    assert os.path.isdir(os.path.join(root2, "postings_old"))
     similarity.ivf_index_compact(spark, base2)
-    assert not os.path.isdir(os.path.join(base2, "postings_old"))
+    assert not os.path.isdir(os.path.join(root2, "postings_old"))
     assert _search_rows(spark, q2, base2) == truth2
 
     # state 3: post-swap, delta dirs not yet cleaned — ledger makes
     # search skip them and a re-run compact must not double-fold
     base3, q3, truth3 = _ivf_crash_fixture(spark, tmp_path, "ivf_postswap")
+    root3 = ledger.current(base3)
     delta_keep = str(tmp_path / "delta_copy")
-    shutil.copytree(os.path.join(base3, "delta"), delta_keep)
+    shutil.copytree(os.path.join(root3, "delta"), delta_keep)
     similarity.ivf_index_compact(spark, base3)
-    shutil.copytree(delta_keep, os.path.join(base3, "delta"))
+    shutil.copytree(delta_keep, os.path.join(root3, "delta"))
     assert _search_rows(spark, q3, base3) == truth3  # no double-count
     similarity.ivf_index_compact(spark, base3)  # no double-fold
     assert _search_rows(spark, q3, base3) == truth3
-    assert spark.read.parquet(os.path.join(base3, "postings")).count() == n_total
+    assert spark.read.parquet(os.path.join(root3, "postings")).count() == n_total
 
 
 def test_ivf_ledger_commit_is_atomic(spark, tmp_path):
@@ -963,18 +974,18 @@ def test_ivf_ledger_commit_is_atomic(spark, tmp_path):
     )
     similarity.ivf_index_append(base)(extra, 1)
     similarity.ivf_index_compact(spark, base)
-    ledger = os.path.join(base, "compacted_deltas.txt")
-    assert not os.path.exists(ledger + ".tmp")
-    with open(ledger) as fh:
+    path = os.path.join(ledger.current(base), "compacted_deltas.txt")
+    assert not os.path.exists(path + ".tmp")
+    with open(path) as fh:
         lines = fh.read().split()
     assert lines == sorted(set(lines)) and set(lines) == {"b0", "b1"}
     # a later append+compact MERGES into the ledger atomically
     similarity.ivf_index_append(base)(extra, 2)
     similarity.ivf_index_compact(spark, base)
-    with open(ledger) as fh:
+    with open(path) as fh:
         lines2 = fh.read().split()
     assert lines2 == sorted(set(lines2)) and set(lines2) == {"b0", "b1", "b2"}
-    assert not os.path.exists(ledger + ".tmp")
+    assert not os.path.exists(path + ".tmp")
 
 
 def test_ivf_compact_preserves_inflight_partial_delta(spark, tmp_path):
@@ -986,7 +997,7 @@ def test_ivf_compact_preserves_inflight_partial_delta(spark, tmp_path):
     import os
 
     base, q, truth = _ivf_crash_fixture(spark, tmp_path, "ivf_inflight")
-    delta_root = os.path.join(base, "delta")
+    delta_root = os.path.join(ledger.current(base), "delta")
     # simulate an in-flight append: a delta dir without _SUCCESS
     partial = os.path.join(delta_root, "b7")
     os.makedirs(partial)
@@ -1074,10 +1085,6 @@ def test_hnsw_index_append_replay_noop_and_reachability(spark, tmp_path):
     sink = similarity.hnsw_index_append(base)
     batch = e.filter(F.col("vec_id") % 2 == 1).limit(40)
     sink(batch, 0)
-    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
-        ledger,
-    )
-
     t1 = ledger.resolve_delta_tables(spark, base, similarity._HNSW_TABLES)
     n_edges = t1["edges"].count()
     n_vecs = t1["vectors"].count()

@@ -18,6 +18,7 @@ from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
 )
 from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
     dedup,
+    ledger,
 )
 from tests.conftest import SF_DIR
 
@@ -75,10 +76,11 @@ def test_compact_preserves_probe_and_folds_layout(spark, tmp_path):
     base, probe, truth = _mh_fixture(spark, tmp_path, "mh_compact")
     dedup.minhash_index_compact(spark, base)
     assert _probe_rows(spark, probe, base) == truth
-    assert not os.path.isdir(os.path.join(base, "delta"))
-    assert not os.path.isdir(os.path.join(base, "postings_new"))
-    assert not os.path.isdir(os.path.join(base, "shingles_new"))
-    with open(os.path.join(base, "compacted_deltas.txt")) as fh:
+    root = ledger.current(base)
+    assert not os.path.isdir(os.path.join(root, "delta"))
+    assert not os.path.isdir(os.path.join(root, "postings_new"))
+    assert not os.path.isdir(os.path.join(root, "shingles_new"))
+    with open(os.path.join(root, "compacted_deltas.txt")) as fh:
         assert set(fh.read().split()) == {"b0", "b1"}
     # idempotent: nothing left to fold
     dedup.minhash_index_compact(spark, base)
@@ -94,7 +96,7 @@ def test_append_replay_after_compaction_is_noop(spark, tmp_path):
     dedup.minhash_index_compact(spark, base)
     sink = dedup.minhash_index_append(base, shingle_fn=_tri)
     sink(d.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 200)), 0)
-    assert not os.path.isdir(os.path.join(base, "delta"))
+    assert not os.path.isdir(os.path.join(ledger.current(base), "delta"))
     assert _probe_rows(spark, probe, base) == truth
 
 
@@ -106,7 +108,7 @@ def test_append_partial_delta_is_redone(spark, tmp_path):
     d = catalog.load(spark, SF_DIR, "documents")
     base, probe, truth = _mh_fixture(spark, tmp_path, "mh_partial")
     batch2 = d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 250))
-    delta = os.path.join(base, "delta", "b1")
+    delta = os.path.join(ledger.current(base), "delta", "b1")
     os.remove(os.path.join(delta, "_SUCCESS"))
     shutil.rmtree(os.path.join(delta, "shingles"))
     partial_view = _probe_rows(spark, probe, base)
@@ -125,20 +127,21 @@ def test_compact_precommit_crash_rolls_back(spark, tmp_path):
     twin = str(tmp_path / "mh_precommit_twin")
     shutil.copytree(base, twin)
     dedup.minhash_index_compact(spark, twin)
+    root, twin_root = ledger.current(base), ledger.current(twin)
     for t in ("postings", "shingles"):
         shutil.copytree(
-            os.path.join(twin, t), os.path.join(base, f"{t}_new")
+            os.path.join(twin_root, t), os.path.join(root, f"{t}_new")
         )
         # manufacture the manifest a crashed compactor would have left
-        with open(os.path.join(base, f"{t}_new", "_FOLDED"), "w") as fh:
+        with open(os.path.join(root, f"{t}_new", "_FOLDED"), "w") as fh:
             fh.write("b0\nb1\n")
-    assert not os.path.isfile(os.path.join(base, "compacted_deltas.txt"))
+    assert not os.path.isfile(os.path.join(root, "compacted_deltas.txt"))
     assert _probe_rows(spark, probe, base) == truth
     # read path is READ-ONLY: the crashed _new dirs survive the probe
-    assert os.path.isdir(os.path.join(base, "postings_new"))
+    assert os.path.isdir(os.path.join(root, "postings_new"))
     dedup.minhash_index_compact(spark, base)
-    assert not os.path.isdir(os.path.join(base, "postings_new"))
-    assert not os.path.isdir(os.path.join(base, "shingles_new"))
+    assert not os.path.isdir(os.path.join(root, "postings_new"))
+    assert not os.path.isdir(os.path.join(root, "shingles_new"))
     assert _probe_rows(spark, probe, base) == truth
 
 
@@ -151,26 +154,27 @@ def test_compact_postcommit_crash_rolls_forward(spark, tmp_path):
     twin = str(tmp_path / "mh_postcommit_twin")
     shutil.copytree(base, twin)
     dedup.minhash_index_compact(spark, twin)
+    root, twin_root = ledger.current(base), ledger.current(twin)
     for t in ("postings", "shingles"):
         shutil.copytree(
-            os.path.join(twin, t), os.path.join(base, f"{t}_new")
+            os.path.join(twin_root, t), os.path.join(root, f"{t}_new")
         )
-        with open(os.path.join(base, f"{t}_new", "_FOLDED"), "w") as fh:
+        with open(os.path.join(root, f"{t}_new", "_FOLDED"), "w") as fh:
             fh.write("b0\nb1\n")
-    with open(os.path.join(base, "compacted_deltas.txt"), "w") as fh:
+    with open(os.path.join(root, "compacted_deltas.txt"), "w") as fh:
         fh.write("b0\nb1\n")
     # state 1: both _new committed, neither swapped
     assert _probe_rows(spark, probe, base) == truth
-    assert os.path.isdir(os.path.join(base, "postings_new"))  # read-only
+    assert os.path.isdir(os.path.join(root, "postings_new"))  # read-only
     # state 2: half-swapped — postings done, shingles_new pending
-    shutil.rmtree(os.path.join(base, "postings"))
+    shutil.rmtree(os.path.join(root, "postings"))
     os.rename(
-        os.path.join(base, "postings_new"), os.path.join(base, "postings")
+        os.path.join(root, "postings_new"), os.path.join(root, "postings")
     )
     assert _probe_rows(spark, probe, base) == truth
     dedup.minhash_index_compact(spark, base)  # writer finishes the swap
-    assert not os.path.isdir(os.path.join(base, "shingles_new"))
-    assert not os.path.isdir(os.path.join(base, "delta"))
+    assert not os.path.isdir(os.path.join(root, "shingles_new"))
+    assert not os.path.isdir(os.path.join(root, "delta"))
     assert _probe_rows(spark, probe, base) == truth
 
 
@@ -180,7 +184,7 @@ def test_compact_preserves_inflight_partial_delta(spark, tmp_path):
     (the ADVICE r06 contract, same as the IVF side)."""
     d = catalog.load(spark, SF_DIR, "documents")
     base, probe, truth = _mh_fixture(spark, tmp_path, "mh_inflight")
-    partial = os.path.join(base, "delta", "b7")
+    partial = os.path.join(ledger.current(base), "delta", "b7")
     os.makedirs(partial)
     dedup.minhash_index_compact(spark, base)  # real fold of b0+b1
     assert os.path.isdir(partial)
@@ -200,19 +204,19 @@ def test_ledger_commit_is_atomic(spark, tmp_path):
     d = catalog.load(spark, SF_DIR, "documents")
     base, probe, truth = _mh_fixture(spark, tmp_path, "mh_ledger")
     dedup.minhash_index_compact(spark, base)
-    ledger = os.path.join(base, "compacted_deltas.txt")
-    assert not os.path.exists(ledger + ".tmp")
-    with open(ledger) as fh:
+    path = os.path.join(ledger.current(base), "compacted_deltas.txt")
+    assert not os.path.exists(path + ".tmp")
+    with open(path) as fh:
         lines = fh.read().split()
     assert lines == sorted(set(lines)) and set(lines) == {"b0", "b1"}
     sink = dedup.minhash_index_append(base, shingle_fn=_tri)
     sink(d.filter((F.col("doc_id") >= 250) & (F.col("doc_id") < 260)), 2)
     dedup.minhash_index_compact(spark, base)
-    with open(ledger) as fh:
+    with open(path) as fh:
         lines2 = fh.read().split()
     assert lines2 == sorted(set(lines2))
     assert set(lines2) == {"b0", "b1", "b2"}
-    assert not os.path.exists(ledger + ".tmp")
+    assert not os.path.exists(path + ".tmp")
 
 
 if __name__ == "__main__":
@@ -257,7 +261,7 @@ def test_bm25_index_lifecycle_matches_from_scratch(spark, tmp_path):
 
     assert got() == truth  # base + deltas
     textindex.bm25_index_compact(spark, base)
-    assert not os.path.isdir(os.path.join(base, "delta"))
+    assert not os.path.isdir(os.path.join(ledger.current(base), "delta"))
     assert got() == truth  # compacted
 
     # replayed appends hit the ledger tombstones — scores unchanged
@@ -287,10 +291,9 @@ def test_bm25_index_query_prunes_by_term(spark, tmp_path):
 
 def test_embdedup_index_lifecycle(spark, tmp_path):
     """Incremental semantic dedup == one-shot at every lifecycle
-    point; replayed appends hit the ledger tombstones; _PARAMS makes
-    the index self-describing (append/probe regenerate the same
-    planes)."""
-    import json
+    point; replayed appends hit the ledger tombstones; the generation's
+    params make the index self-describing (append/probe regenerate the
+    same planes)."""
 
     from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
         similarity,
@@ -310,8 +313,11 @@ def test_embdedup_index_lifecycle(spark, tmp_path):
 
     inc = str(tmp_path / "ed_inc")
     similarity.embdedup_index_build(e.filter(F.col("vec_id") % 2 == 0), inc)
-    with open(os.path.join(inc, "_PARAMS.json")) as fh:
-        assert json.load(fh) == {"n_planes": 4, "n_tables": 16, "seed": 42}
+    assert ledger.read_params(ledger.current(inc)) == {
+        "n_planes": 4,
+        "n_tables": 16,
+        "seed": 42,
+    }
     sink = similarity.embdedup_index_append(inc)
     sink(rest.filter(F.col("vec_id") % 4 == 1), 0)
     sink(rest.filter(F.col("vec_id") % 4 == 3), 1)
@@ -326,9 +332,61 @@ def test_embdedup_index_lifecycle(spark, tmp_path):
     assert any(c % 2 == 1 for _, c, _ in truth)
     assert rows(inc) == truth
     similarity.embdedup_index_compact(spark, inc)
-    assert not os.path.isdir(os.path.join(inc, "delta"))
+    inc_root = ledger.current(inc)
+    assert not os.path.isdir(os.path.join(inc_root, "delta"))
     assert rows(inc) == truth
     # replay after compaction: tombstoned, no double-insert
     sink(rest.filter(F.col("vec_id") % 4 == 1), 0)
-    assert not os.path.isdir(os.path.join(inc, "delta"))
+    assert not os.path.isdir(os.path.join(inc_root, "delta"))
     assert rows(inc) == truth
+
+
+# ----------------------------------------------- band-count argument
+
+
+@pytest.mark.parametrize("bands", [0, 40], ids=["no-bands", "over-hashes"])
+@pytest.mark.parametrize(
+    "op",
+    [
+        "minhash_neardup_pairs",
+        "minhash_index",
+        "minhash_dedup_incremental",
+        "minhash_index_build",
+        "minhash_index_append",
+        "minhash_index_probe",
+    ],
+)
+def test_minhash_rejects_bands_outside_hash_count(
+    spark, tmp_path, monkeypatch, op, bands
+):
+    """0 bands (a division by zero) and more bands than the 32 hashes
+    (a band with no hash to concatenate) are refused with a ValueError
+    at entry, before any persist or any write under the index dir."""
+
+    def no_persist(df):
+        raise AssertionError("persisted before the band check")
+
+    monkeypatch.setattr(dedup, "_persist_tracked", no_persist)
+    d = catalog.load(spark, SF_DIR, "documents")
+    base = str(tmp_path / "mh_bands")
+    calls = {
+        "minhash_neardup_pairs": lambda: dedup.minhash_neardup_pairs(
+            d, bands=bands
+        ),
+        "minhash_index": lambda: dedup.minhash_index(d, bands=bands),
+        "minhash_dedup_incremental": lambda: dedup.minhash_dedup_incremental(
+            d, d, d, bands=bands
+        ),
+        "minhash_index_build": lambda: dedup.minhash_index_build(
+            d, base, bands=bands
+        ),
+        "minhash_index_append": lambda: dedup.minhash_index_append(
+            base, bands=bands
+        ),
+        "minhash_index_probe": lambda: dedup.minhash_index_probe(
+            d, base, bands=bands
+        ),
+    }
+    with pytest.raises(ValueError, match="bands"):
+        calls[op]()
+    assert not os.path.exists(base)

@@ -965,7 +965,9 @@ def test_ivf_whole_operation_jobs_are_pinned(spark, tmp_path):
 
 def test_index_rebuild_forgets_memoized_schema(spark, tmp_path):
     """A rebuild at the same base_dir with a new column type is read
-    with the new type: *_index_build drops the memoized schemas."""
+    with the new type: *_index_build writes a new generation, whose
+    tables are memoized under its own root, and the ledger forgets the
+    retired generation's schemas."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
