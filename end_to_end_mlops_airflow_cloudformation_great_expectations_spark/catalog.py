@@ -18,12 +18,15 @@ whichever physical directories (base, ``{table}_new``, deltas) a read
 resolves to, so base + deltas share one schema; a rebuild writes a new
 generation root (``operators/ledger.build``), so a rebuild with new
 column types is inferred again, and the ledger calls
-``forget_schemas`` on the generation it retires.
+``forget_schemas`` on the generation it retires. A writer that knows
+the footer schema of what it just wrote records it with
+``remember_schema`` instead of leaving the first read to infer it.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,16 +60,25 @@ def read_parquet(
     """Read ``paths`` in ONE scan, with the footer schema memoized under
     ``(applicationId, abspath(key or paths[0]))``: the first read infers
     it, later reads pass it back and launch no inference job."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(key or paths[0]),
-    )
+    memo_key = _memo_key(spark, key or paths[0])
     schema = _SCHEMA_MEMO.get(memo_key)
     if schema is None:
         df = spark.read.parquet(*paths)
         _SCHEMA_MEMO[memo_key] = df.schema
         return df
     return spark.read.schema(schema).parquet(*paths)
+
+
+def remember_schema(spark: SparkSession, path: str, schema) -> None:
+    """Memoize ``schema`` for ``path`` as if a first read had inferred
+    it — for a directory the package has just written itself, whose
+    footer schema it already knows, so its first read runs no
+    inference job."""
+    _SCHEMA_MEMO[_memo_key(spark, path)] = schema
+
+
+def _memo_key(spark: SparkSession, path: str) -> tuple[str, str]:
+    return (spark.sparkContext.applicationId, os.path.abspath(path))
 
 
 def forget_schemas(base_dir: str) -> None:
@@ -83,6 +95,11 @@ def forget_schemas(base_dir: str) -> None:
         del _SCHEMA_MEMO[memo_key]
 
 
+#: Sessions ``load`` has set its two runtime confs on (weakly held: a
+#: stopped session's entry goes with it).
+_CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one canonical table as a DataFrame.
 
@@ -95,11 +112,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reported, so it is congruent by construction. Name congruence is
     cheap and catches drift.
     """
-    # Defensive runtime confs: the caller's session (e.g. the driver's)
-    # may not carry our SCALE_PROFILE. Both are runtime-settable SQL
-    # confs; UTC keeps timestamp↔epoch conversions aligned with DuckDB.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if spark not in _CONFIGURED:
+        # Defensive runtime confs: the caller's session (e.g. a plain
+        # SparkSession) may not carry our SCALE_PROFILE. Both are
+        # runtime-settable SQL confs; UTC keeps timestamp↔epoch
+        # conversions aligned with DuckDB. Set once per session: two
+        # Py4J round trips per load otherwise.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        _CONFIGURED.add(spark)
     df = read_parquet(spark, table_path(sf_dir, name))
     # TIMESTAMP(NANOS) columns surface as LongType nanos under
     # spark.sql.legacy.parquet.nanosAsLong; truncate to micros (exactly

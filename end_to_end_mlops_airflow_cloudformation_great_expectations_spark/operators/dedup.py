@@ -820,7 +820,12 @@ def minhash_index_append(
     directory holding BOTH subtables under the shared delta-index
     protocol (:func:`.ledger.delta_append_sink`: root ``_SUCCESS``
     commit marker, aborted-write redo on replay, ledger tombstones
-    after compaction)."""
+    after compaction). The batch's hashed shingles are persisted (the
+    module's tracked set; the next dedup call evicts them) and written
+    first: that write fills the cache and the ``postings`` write reads
+    it, so the batch is scanned and shingled once, in 3 jobs. Written
+    the other way round, AQE materializes the cache as a job of its
+    own (4)."""
     from . import ledger
 
     _check_bands("minhash_index_append", n_hashes, bands)
@@ -829,7 +834,8 @@ def minhash_index_append(
         postings, shingles = minhash_index(
             batch_df, id_col, text_col, k, n_hashes, bands, shingle_fn
         )
-        return {"postings": postings, "shingles": shingles}
+        # dict order is write order
+        return {"shingles": _persist_tracked(shingles), "postings": postings}
 
     return ledger.delta_append_sink(base_dir, tables)
 

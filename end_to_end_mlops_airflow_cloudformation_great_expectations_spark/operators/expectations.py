@@ -19,6 +19,7 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -37,24 +38,30 @@ class Suite:
     into one Observation.
 
     ``observe`` (CollectMetrics) forbids DISTINCT aggregates, so an
-    expectation may carry a separate observe-safe variant — uniqueness
-    uses exact ``countDistinct`` in ``validate`` and HLL
-    ``approx_count_distinct`` in ``attach`` (which is also the sane
-    choice at 100 TB: the streaming gate shouldn't shuffle every key).
+    expectation whose metric is one must carry a separate observe-safe
+    variant — uniqueness uses exact ``countDistinct`` in ``validate``
+    and HLL ``approx_count_distinct`` in ``attach`` (which is also the
+    sane choice at 100 TB: the streaming gate shouldn't shuffle every
+    key).
     """
 
     name: str
     metrics: list[tuple[str, Column]] = field(default_factory=list)
     observe_metrics: list[tuple[str, Column]] = field(default_factory=list)
     checks: dict[str, object] = field(default_factory=dict)
+    #: names of the metrics that carry an observe-safe variant: their
+    #: exact value needs an aggregate job
+    exact_only: set[str] = field(default_factory=set)
 
     def expect(
         self, metric_name: str, metric: Column, check, observe_metric: Column | None = None
     ) -> "Suite":
         self.metrics.append((metric_name, metric.alias(metric_name)))
-        self.observe_metrics.append(
-            (metric_name, (observe_metric if observe_metric is not None else metric).alias(metric_name))
-        )
+        if observe_metric is None:
+            observe_metric = metric
+        else:
+            self.exact_only.add(metric_name)
+        self.observe_metrics.append((metric_name, observe_metric.alias(metric_name)))
         self.checks[metric_name] = check
         return self
 
@@ -107,14 +114,32 @@ class Suite:
         return {k: bool(chk(metrics[k])) for k, chk in self.checks.items()}
 
     def validate(self, df: DataFrame) -> dict:
-        """Run the suite now (one aggregate job) and raise on violation.
+        """Run the suite now and raise on violation. With every metric
+        safe to observe, one scan job: the metrics ride a ``noop`` write
+        as an Observation (no exchange). A suite with an exact DISTINCT
+        metric runs a plain ``agg`` instead (partial and final
+        aggregation: two jobs under AQE), and so does one whose DISTINCT
+        metric came without an observe-safe variant (``observe`` refuses
+        it at analysis)."""
+        metrics = None if self.exact_only else self._observed(df)
+        if metrics is None:
+            metrics = self._aggregated(df)
+        return self._check(metrics)
 
-        Uses a plain ``agg`` rather than observe+count so validation is
-        itself a single collectable row even when the caller doesn't
-        otherwise materialize ``df``.
-        """
-        row = df.agg(*[m for _, m in self.metrics]).collect()[0]
-        metrics = row.asDict()
+    def _aggregated(self, df: DataFrame) -> dict:
+        return df.agg(*[m for _, m in self.metrics]).collect()[0].asDict()
+
+    def _observed(self, df: DataFrame) -> dict | None:
+        """The metrics observed on one ``noop`` write of ``df``; None
+        when ``observe`` refuses one of them."""
+        try:
+            observed, obs = self.attach(df)
+        except AnalysisException:
+            return None
+        observed.write.format("noop").mode("overwrite").save()
+        return obs.get
+
+    def _check(self, metrics: dict) -> dict:
         results = self.evaluate(metrics)
         failed = [k for k, ok in results.items() if not ok]
         if failed:

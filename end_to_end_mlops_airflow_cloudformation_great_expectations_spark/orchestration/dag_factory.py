@@ -91,9 +91,14 @@ def trips_pipeline_spec(
         return spark.read.parquet(conf["input_path"])
 
     def validate(spark, conf):
+        from .. import catalog
         from ..operators.expectations import Suite
 
-        df = spark.read.parquet(conf["input_path"])
+        # the gate must see the batch's real schema: drop any memo for
+        # the input path and infer it afresh; the featurize step then
+        # reads the batch through the schema inferred here
+        catalog.forget_schemas(conf["input_path"])
+        df = catalog.read_parquet(spark, conf["input_path"])
         return (
             Suite("trips_raw")
             .expect_row_count_between(1)
@@ -104,13 +109,14 @@ def trips_pipeline_spec(
 
     def featurize_split_write(spark, conf):
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         from .. import catalog
         from ..functions.columns import frac_hour, weekday_name
         from ..operators.encode import hash_split_col
         from ..operators.geo import haversine_km
 
-        df = spark.read.parquet(conf["input_path"])
+        df = catalog.read_parquet(spark, conf["input_path"])
         feats = df.select(
             "trip_id",
             "vendor",
@@ -132,9 +138,20 @@ def trips_pipeline_spec(
         )
         # ONE job writes every vendor × split partition (vs the
         # reference's serial per-vendor pandas writes)
-        catalog.forget_schemas(conf["output_path"])
-        feats.write.mode("overwrite").partitionBy("vendor", "split").parquet(
+        parts = ("vendor", "split")
+        feats.write.mode("overwrite").partitionBy(*parts).parquet(
             conf["output_path"]
+        )
+        # what a read of the output infers: the data columns, then the
+        # partition columns, all nullable; the vendor checks read it
+        # without an inference job
+        fields = [f for f in feats.schema if f.name not in parts] + [
+            feats.schema[p] for p in parts
+        ]
+        catalog.remember_schema(
+            spark,
+            conf["output_path"],
+            T.StructType([T.StructField(f.name, f.dataType) for f in fields]),
         )
         return conf["output_path"]
 
@@ -143,10 +160,8 @@ def trips_pipeline_spec(
             from .. import catalog
             from ..operators.expectations import Suite
 
-            # the package wrote output_path itself: the vendor checks
-            # share one footer-schema inference (the raw input reads
-            # above keep inferring — the gate must see the batch's
-            # real schema)
+            # the package wrote output_path itself and recorded its
+            # schema: the vendor checks run no inference job
             part = catalog.read_parquet(spark, conf["output_path"]).where(
                 f"vendor = '{vendor}'"
             )

@@ -54,6 +54,22 @@ SCALE_PROFILE: dict[str, str] = {
     # Python process: pyspark.errors.utils.is_debugging_enabled caches
     # the value it sees at the first wrapped call.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Generated-class cache sized to a warm session's working set.
+    # Spark's default of 100 entries is smaller than one ingest round
+    # of perfbench's ingest_rounds (~90 whole-stage classes), so each
+    # round evicted the classes the next one needed and Janino compiled
+    # them again. Measured with an unbounded cache (CodegenMetrics
+    # compile count): a full ingest_rounds run compiles ~200 distinct
+    # classes, one bench.py pass over its 252 queries 5,037 (sf0.1;
+    # 5,033 at sf0.01). 8192 covers the larger count with 60 % to
+    # spare. Holding all 5,033 cost ~8.5 KB of metaspace per class
+    # (+41 MB against the default), so the cap bounds that at ~70 MB.
+    # Static: Spark reads it once, at the JVM's first codegen, so like
+    # spark.driver.memory it takes effect only when get_spark launches
+    # the JVM; a cluster spark-submit passes it with the profile.
+    # Numeric literals are inlined into the generated source, so a plan
+    # re-run with a new literal is a new class either way.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 

@@ -59,6 +59,59 @@ def test_expectation_observe_is_single_pass(spark):
     assert obs.get["row_count"] == n
 
 
+def _no_distinct_suite() -> expectations.Suite:
+    return (
+        expectations.Suite("observable")
+        .expect_row_count_between(1)
+        .expect_no_nulls("event_id")
+        .expect_values_between("value", 0.0, 1e6)
+        .expect_values_in_set(
+            "event_type", {"click", "error", "purchase", "signup", "view"}
+        )
+    )
+
+
+def _suite_outcome(suite, metrics_fn, df):
+    try:
+        return "ok", suite._check(metrics_fn(df))
+    except expectations.ExpectationError as exc:
+        return "raised", str(exc)
+
+
+@pytest.mark.parametrize("frame", ["empty", "failing", "passing"])
+def test_validate_observed_and_aggregated_paths_agree(spark, frame):
+    """A suite without DISTINCT metrics validates through one observed
+    noop write; the agg path it replaced returns the same metric dict
+    and raises the same ExpectationError."""
+    e = catalog.load(spark, SF_DIR, "events")
+    df = {
+        "empty": e.where(F.lit(False)),
+        "failing": e.withColumn(
+            "value",
+            F.when(F.col("event_id") == 0, -5.0).otherwise(F.col("value")),
+        ),
+        "passing": e,
+    }[frame]
+    suite = _no_distinct_suite()
+    observed = _suite_outcome(suite, suite._observed, df)
+    aggregated = _suite_outcome(suite, suite._aggregated, df)
+    assert observed == aggregated
+    assert observed[0] == ("ok" if frame == "passing" else "raised")
+    assert _suite_outcome(suite, suite.validate, df) == observed
+
+
+def test_validate_distinct_metric_without_variant_aggregates(spark):
+    """observe refuses a DISTINCT aggregate; a suite that passes one
+    without an observe-safe variant still validates, exactly."""
+    e = catalog.load(spark, SF_DIR, "events")
+    metrics = (
+        expectations.Suite("distinct")
+        .expect("types", F.countDistinct("event_type"), lambda v: v == 5)
+        .validate(e)
+    )
+    assert metrics == {"types": 5}
+
+
 def _mk_asof_fixture(spark):
     quotes = spark.createDataFrame(
         [

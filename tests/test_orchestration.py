@@ -60,6 +60,26 @@ def test_run_locally_end_to_end(spark, tmp_path):
         assert results[f"check_{v}"]["row_count"] > 0
 
 
+def test_featurize_records_the_schema_a_read_infers(spark, tmp_path):
+    """featurize_split_write memoizes the schema of its partitioned
+    output, so the vendor checks read it without an inference job; that
+    schema is exactly what a fresh read of the output infers."""
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
+        catalog,
+    )
+
+    raw = str(tmp_path / "trips_raw")
+    out = str(tmp_path / "trips_out")
+    make_trips(spark, n=200).write.parquet(raw)
+    spec = dag_factory.trips_pipeline_spec(VENDORS, raw, out)
+    task = {t.task_id: t for t in spec.tasks}["featurize_split_write"]
+    task.fn(spark, task.conf)
+    memo = catalog._SCHEMA_MEMO[
+        (spark.sparkContext.applicationId, str(tmp_path / "trips_out"))
+    ]
+    assert memo == spark.read.parquet(out).schema
+
+
 def test_airflow_seam_raises_cleanly():
     spec = dag_factory.trips_pipeline_spec(VENDORS, "/in", "/out")
     with pytest.raises(NotImplementedError, match="airflow"):

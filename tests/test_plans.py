@@ -963,6 +963,90 @@ def test_ivf_whole_operation_jobs_are_pinned(spark, tmp_path):
     assert not over, (over, jobs)
 
 
+#: Spark jobs of one MinHash append on a warm index (sf0.001, local[8]):
+#: the shingles write fills a cache of the batch's hashed shingles and
+#: the postings write (shuffle map stage + write) reads it. Shingling
+#: the batch once per subtable also took 3; writing postings first from
+#: the cache takes 4 (AQE materializes the cache in a job of its own).
+_MINHASH_APPEND_JOB_CEILING = 3
+
+
+def test_minhash_append_jobs_are_pinned(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark import (
+        catalog,
+    )
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators import (
+        dedup,
+    )
+
+    mh = str(tmp_path / "minhash")
+    docs = catalog.load(spark, SF_DIR, "documents")
+    dedup.minhash_index_build(docs.filter(F.col("doc_id") < 300), mh)
+    sink = dedup.minhash_index_append(mh)
+    sink(docs.filter(F.col("doc_id").between(300, 349)), 0)
+    jobs = _build_jobs(
+        spark,
+        lambda: sink(docs.filter(F.col("doc_id").between(350, 399)), 1),
+        "minhash-append",
+    )
+    assert jobs <= _MINHASH_APPEND_JOB_CEILING, jobs
+
+
+#: Spark jobs of each trips-DAG task on its second run in a session
+#: (sf0.001 trips fixture, local[8]): validate infers the batch schema
+#: and runs the exact-uniqueness aggregate; featurize reads the batch
+#: through that schema and writes once; each vendor check is one
+#: observed scan of the output, whose schema featurize recorded (every
+#: other task: the vendor checks). Before: 4 / 2 / 3 for the first
+#: check and 2 for the others.
+_DAG_TASK_JOB_CEILINGS = {"validate_raw": 4, "featurize_split_write": 1}
+
+
+def test_dag_task_jobs_are_pinned(spark, tmp_path):
+    from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.orchestration import (
+        dag_factory,
+    )
+    from tests.test_reference_fidelity import VENDORS, make_trips
+
+    raw = str(tmp_path / "trips_raw")
+    make_trips(spark, n=400).write.parquet(raw)
+    spec = dag_factory.trips_pipeline_spec(VENDORS, raw, str(tmp_path / "out"))
+    spec.run_locally(spark)
+    jobs = {
+        t.task_id: _build_jobs(
+            spark, lambda t=t: t.fn(spark, t.conf), f"dag-{t.task_id}"
+        )
+        for t in spec.topo_order()
+    }
+    over = {n: c for n, c in jobs.items() if c > _DAG_TASK_JOB_CEILINGS.get(n, 1)}
+    assert not over, (over, jobs)
+
+
+def test_warm_plan_is_not_recompiled(spark):
+    """A warm session reuses the whole-stage-codegen classes it has
+    compiled: get_spark sizes Spark's generated-class cache
+    (spark.sql.codegen.cache.maxEntries, default 100) above a session's
+    working set, so a plan prepared again after 160 other plans compiles
+    nothing. Each plan differs by a literal, which codegen inlines into
+    the source, so each is a distinct class. Preparing a plan's RDD
+    compiles its codegen stage without running a job."""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+
+    def prepare(i):
+        df = spark.range(1).selectExpr(f"id + {i} AS x")
+        df._jdf.queryExecution().executedPlan().execute()
+
+    for i in range(161):
+        prepare(i)
+    before = compiles.getCount()
+    prepare(0)
+    assert compiles.getCount() == before
+
+
 def test_index_rebuild_forgets_memoized_schema(spark, tmp_path):
     """A rebuild at the same base_dir with a new column type is read
     with the new type: *_index_build writes a new generation, whose
