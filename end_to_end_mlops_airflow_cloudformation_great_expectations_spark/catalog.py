@@ -168,6 +168,24 @@ def local_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     )
 
 
+def _plan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes (file-backed for
+    scans), or None when the plan has none: a relation without
+    statistics, such as a frame built from local rows, reports
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue), which as a width
+    would ask for the 1 << 20 partition cap. Pure driver-side plan
+    analysis, zero jobs."""
+    try:
+        size = int(
+            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        unknown = conf.defaultSizeInBytes()
+    except Exception:
+        return None
+    return None if size >= unknown else size
+
+
 def spread_narrow(df: DataFrame, key: str | None = None) -> DataFrame:
     """Repartition ``df`` to defaultParallelism when its input is
     narrow — WITHOUT finalizing its plan. The old guard
@@ -177,32 +195,27 @@ def spread_narrow(df: DataFrame, key: str | None = None) -> DataFrame:
     (measured r12: twin 1.6 s javaToPython jobs inside
     p_curation_pipeline — guide §1.4 warns about exactly this
     conversion). The width here is ESTIMATED from the optimizer's
-    size statistics (file-backed for scans, so it mirrors the scan
-    splitter: bytes / maxPartitionBytes) — pure driver-side plan
-    analysis, zero jobs. Small inputs still spread before CPU-bound
-    hashing/explode work; corpus-scale inputs no-op exactly as
-    before. Derived frames whose statistics overestimate (joins)
-    simply skip the spread, which is the safe direction at scale."""
+    size statistics (``_plan_bytes``, so it mirrors the scan
+    splitter: bytes / maxPartitionBytes) — zero jobs. Small inputs
+    still spread before CPU-bound hashing/explode work; corpus-scale
+    inputs no-op exactly as before. Derived frames whose statistics
+    overestimate (joins) simply skip the spread, which is the safe
+    direction at scale."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
+    size = _plan_bytes(df)
+    if size is None:
+        return df
     try:
-        size = int(
-            str(
-                df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
         # Spark's own byte-string parser: "1g", "64k", "128m" and plain
         # byte counts all mean what the scan splitter takes them to mean
         java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
         mpb = java_utils.byteStringAsBytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
-        if mpb <= 0:
-            return df
     except Exception:
+        return df
+    if mpb <= 0:
         return df
     if size // mpb + 1 < par:
         return df.repartition(par, key) if key else df.repartition(par)
@@ -212,68 +225,20 @@ def spread_narrow(df: DataFrame, key: str | None = None) -> DataFrame:
 def est_width(df: DataFrame, bytes_per_part: int = 32 << 20) -> int:
     """Scale-adaptive partition count for an explicit keyed
     repartition feeding CPU-bound per-group work (grouped-map pandas,
-    per-group model fits): max(defaultParallelism, plan-statistics
-    size / ``bytes_per_part``). AQE coalesces post-shuffle partitions
-    by BYTES, which is the wrong objective when the per-row cost is
-    Python-side CPU (measured r12: a_ewma_user's grouped-map ran ~30k
+    per-group model fits, per-doc window rounds): max(defaultParallelism,
+    ``_plan_bytes`` / ``bytes_per_part``). AQE coalesces post-shuffle
+    partitions by BYTES, which is the wrong objective when the per-row
+    cost is Python-side CPU (measured r12: a_ewma_user's grouped-map ran ~30k
     pandas groups on the 6 byte-coalesced tasks of a ~15 MB shuffle —
     4.5 s on a 32-core host). An explicit repartition(est_width, key)
     pins cores-many partitions at bench scale and grows with the data
     at corpus scale; the downstream groupBy on the same key reuses the
-    exchange (§2.4). Pure driver-side plan analysis, zero jobs."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            str(
-                df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:
+    exchange (§2.4). Zero jobs."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    size = _plan_bytes(df)
+    if size is None:
         return par
     return max(par, min(size // bytes_per_part, 1 << 20))
-
-
-def bounded_parts(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    bytes_per_part: int = 4 << 20,
-) -> int | None:
-    """Partition count keyed off INPUT SIZE, for iterative k-pass
-    queries that must not inherit the driver's plain-session default
-    of 200 shuffle partitions (VERDICT r10 item 6: text_bpe_encode's
-    k window passes ran 200 tasks each under ``--plain`` because
-    cached round plans pin their partitioning —
-    spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
-    false — so AQE never coalesced them; 71 s at sf0.01 for ~60 KB of
-    input). Floor = defaultParallelism (keeps every core busy and
-    leaves the profiled 32-thread bench environment unchanged);
-    growth = one partition per ``bytes_per_part`` of on-disk input,
-    so at 100 TB the bytes term dominates and the bound scales
-    linearly with data. Returns None for non-local paths (remote
-    deployments size their sessions explicitly)."""
-    path = table_path(sf_dir, name)
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-        elif os.path.isfile(path):
-            size = os.path.getsize(path)
-        else:
-            return None
-    except OSError:
-        return None
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(size // bytes_per_part) + 1,
-    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -688,13 +688,24 @@ def minhash_index(
     ``minhash_index(batch)`` unioned onto both tables — no global
     rebuild, no read-modify-write."""
     _check_bands("minhash_index", n_hashes, bands)
+    shingles = _shingle_table(docs, id_col, text_col, k, shingle_fn)
+    return _postings(shingles, n_hashes, bands), shingles
+
+
+def _shingle_table(docs: DataFrame, id_col, text_col, k, shingle_fn):
+    """The (id, sh) hashed-shingle table of ``minhash_index``."""
     fn = shingle_fn or (lambda c: char_shingles(c, k))
-    shingles = docs.select(
+    return docs.select(
         F.col(id_col).alias("id"),
         hashed_shingles(fn(F.col(text_col))).alias("sh"),
     )
-    postings = _band_buckets(shingles, "id", n_hashes, bands)
-    return postings.select("band", "bucket", "id"), shingles
+
+
+def _postings(shingles: DataFrame, n_hashes: int, bands: int) -> DataFrame:
+    """The (band, bucket, id) postings of a hashed-shingle table."""
+    return _band_buckets(shingles, "id", n_hashes, bands).select(
+        "band", "bucket", "id"
+    )
 
 
 def minhash_dedup_incremental(
@@ -793,16 +804,19 @@ def minhash_index_build(
     persisted on-disk index at ``base_dir`` (tables ``postings`` +
     ``shingles``, committed atomically by :func:`.ledger.build`) — the
     durable form the append/probe/compact lifecycle below maintains.
-    One corpus scan; both tables are narrow (3 longs per band per doc;
+    The corpus is scanned and shingled once: ``shingles`` is written
+    first and ``postings`` is derived from that staged table read back,
+    with no persist. Both tables are narrow (3 longs per band per doc;
     one long-array row per doc)."""
+    from .. import catalog as _catalog
     from . import ledger
 
-    postings, shingles = minhash_index(
-        docs, id_col, text_col, k, n_hashes, bands, shingle_fn
-    )
+    _check_bands("minhash_index_build", n_hashes, bands)
+    shingles = _shingle_table(docs, id_col, text_col, k, shingle_fn)
     with ledger.build(base_dir) as root:
-        postings.write.parquet(f"{root}/postings")
         shingles.write.parquet(f"{root}/shingles")
+        staged = _catalog.read_parquet(docs.sparkSession, f"{root}/shingles")
+        _postings(staged, n_hashes, bands).write.parquet(f"{root}/postings")
 
 
 def minhash_index_append(

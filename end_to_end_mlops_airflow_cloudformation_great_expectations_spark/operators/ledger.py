@@ -134,6 +134,8 @@ def build(base_dir: str, params: dict | None = None):
         # COMMIT POINT: readers resolve the new generation from here on
         _write_atomic(os.path.join(base_dir, CURRENT), name + "\n")
     except BaseException:
+        # a staged table read back during the build memoized its schema
+        catalog.forget_schemas(root)
         shutil.rmtree(root, ignore_errors=True)
         raise
     if live:

@@ -80,15 +80,14 @@ def trips_pipeline_spec(
     schedule: str | None = "@daily",
 ) -> PipelineSpec:
     """The reconstructed reference pipeline (SURVEY.md §3.3) as a spec:
-    ingest → validate (GX gate) → featurize (A4-A6) → split (A7) →
-    single partitioned fan-out write (S3) → per-vendor validation.
+    ``validate_raw`` (GX gate on the input batch) →
+    ``featurize_split_write`` (featurize A4-A6, split A7, one
+    partitioned fan-out write) → ``check_<vendor>`` (per-vendor
+    validation of the written output).
 
     ``vendors`` parameterizes only the *validation* fan-out tasks (one
     light assertion task per vendor, mirroring the reference's
     per-vendor GX checks); the heavy work is vendor-agnostic Spark."""
-
-    def ingest(spark, conf):
-        return spark.read.parquet(conf["input_path"])
 
     def validate(spark, conf):
         from .. import catalog

@@ -12,15 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators import encode, geo
 from .registry import query
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
 
 
 @query(

@@ -23,13 +23,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators.ranks import constant_partition_key as _const_pkey
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
 
 
 def _oracle_scale(sf_dir: str) -> bool:

@@ -18,13 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators import jpeg, packing, text
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 @query(
@@ -704,13 +700,7 @@ def text_bpe_merges_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. The per-round merge application was additionally verified
     against a sequential Python greedy-BPE reference at sf0.001
     (tests/test_staged_r05.py pins the invariants)."""
-    from .. import catalog
-
-    return text.bpe_merge_rounds(
-        _t(spark, sf_dir, "documents"),
-        k=3,
-        n_parts=catalog.bounded_parts(spark, sf_dir, "documents"),
-    )
+    return text.bpe_merge_rounds(_t(spark, sf_dir, "documents"), k=3)
 
 
 @query(
@@ -864,13 +854,8 @@ def text_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     window arithmetic, so the merge APPLICATION (not just the chosen
     winners) is verified document-by-document cross-engine. Same lazy
     plan discipline as text_bpe_merges_k."""
-    from .. import catalog
-
     tok = text.bpe_merge_rounds(
-        _t(spark, sf_dir, "documents"),
-        k=3,
-        return_tokens=True,
-        n_parts=catalog.bounded_parts(spark, sf_dir, "documents"),
+        _t(spark, sf_dir, "documents"), k=3, return_tokens=True
     )
     return tok.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_syms"),

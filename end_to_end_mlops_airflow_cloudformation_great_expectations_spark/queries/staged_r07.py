@@ -32,11 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
+from ..catalog import load as _t
 from .registry import ORACLES, query
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 _SCRATCH_ROOT = None

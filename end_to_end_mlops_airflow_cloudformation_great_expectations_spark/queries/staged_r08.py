@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators.train import kmeans_fit, kmeans_report, logreg_fit, logreg_logloss
 from .registry import query
 
@@ -43,10 +43,6 @@ _KM_D = 4
 _KM_K = 3
 _KM_ROUNDS = 4
 _KM_INIT = [[-0.1] * _KM_D, [0.0] * _KM_D, [0.1] * _KM_D]
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 def _sql_logreg_oracle() -> str:

@@ -31,14 +31,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators import text
 from ..operators.ranks import attach_global_ranks, constant_partition_key
 from .registry import ORACLES, query
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 # Vector helpers take column NAMES and return one ``F.expr``: the

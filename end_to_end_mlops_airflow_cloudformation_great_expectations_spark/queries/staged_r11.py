@@ -28,15 +28,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators.ranks import constant_partition_key
 from .registry import query
 from .staged_r06 import _CMS_SEEDS, _cms_buckets, _cms_oracle_bucket_sql
 from .staged_r07 import _scratch
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 _LPA_ROUNDS = 3

@@ -131,7 +131,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators.encode import hash_split_col
 from ..operators.ranks import attach_global_ranks, attach_running_last
 from ..operators.sketches import bloom_build, bloom_probe
@@ -140,10 +140,6 @@ from .registry import query
 from .staged_r06 import _CMS_SEEDS, _cms_oracle_bucket_sql
 from .staged_r10 import _SCORES_CTE
 from .staged_r11 import _LPA_ORACLE_GRAPH
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 # ---------------------------------------------------------------------------

@@ -24,14 +24,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from .registry import query
 from .staged_r07 import _scratch
 from .staged_r12 import _KNN_COHORT, _KNN_K, _KNN_SPLIT_SQL
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 @query(

@@ -44,13 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators.ranks import attach_global_ranks, constant_partition_key
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 #: Shared DuckDB CTE: the daily lineitem series on the cent grid.

@@ -19,14 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators import multimodal as mm
 from .registry import query
 from .staged_r06 import _cms_oracle_bucket_sql
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 _PH_SLICE = 400  # doc_id < 400: bounds the oracle's all-pairs replay

@@ -10,9 +10,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import load as _t
 from .registry import query
 from .staged_r05 import _bpe_round_sql
-from .staged_r07 import _scratch, _t
+from .staged_r07 import _scratch
 
 # ---------------------------------------------------------------------------
 # dedup_substring — exact-substring duplication accounting
@@ -201,16 +202,10 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, counts) rows enter the packing shuffle; text never
     moves. Lazy end to end (return_tokens at k=3 marks round caches
     lazily)."""
-    from .. import catalog
     from ..operators import packing, text
 
     toks = text.bpe_merge_rounds(
-        _t(spark, sf_dir, "documents"),
-        k=3,
-        return_tokens=True,
-        # plain-session guard (VERDICT r10 item 6): bound the k window
-        # passes' partitioning off input bytes, not the session default
-        n_parts=catalog.bounded_parts(spark, sf_dir, "documents"),
+        _t(spark, sf_dir, "documents"), k=3, return_tokens=True
     )
     n_parts = F.size(F.split(F.col("sym"), " "))
     enc = toks.groupBy("doc_id").agg(

@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Window
 
+from ..catalog import load as _t
 from .registry import query
 from .staged_r05 import _bpe_round_sql
-from .staged_r07 import _t
 
 # ---------------------------------------------------------------------------
 # text_bpe_merges_k16 — BPE induction past demo depth (VERDICT r10 item 4)
@@ -56,9 +56,9 @@ def text_bpe_merges_k16(spark: SparkSession, sf_dir: str) -> DataFrame:
     laziness exception, documented in the operator: finalizing each
     round's checkpoint RDD materializes its shuffle stages (bounded,
     O(k) over the token stream) — the sanctioned inherently-iterative
-    trade, same as pagerank's checkpoint discipline. Partitioning
-    bounded off input bytes (catalog.bounded_parts — the plain-
-    session guard).
+    trade, same as pagerank's checkpoint discipline. The operator
+    sizes its partitioning off its input's plan statistics (the
+    plain-session guard).
 
     The DuckDB twin unrolls the SAME 16 rounds (the shared
     _bpe_round_sql builder, now AS MATERIALIZED per round — DuckDB
@@ -75,14 +75,9 @@ def text_bpe_merges_k16(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed-BPE shape. The checkpoint keeps each round's plan
     O(1), so k=100s of merges grows wall-clock linearly, never the
     optimizer."""
-    from .. import catalog
     from ..operators import text
 
-    return text.bpe_merge_rounds(
-        _t(spark, sf_dir, "documents"),
-        k=_K16,
-        n_parts=catalog.bounded_parts(spark, sf_dir, "documents"),
-    )
+    return text.bpe_merge_rounds(_t(spark, sf_dir, "documents"), k=_K16)
 
 
 # ---------------------------------------------------------------------------

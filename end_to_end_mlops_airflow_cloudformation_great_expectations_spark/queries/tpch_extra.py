@@ -10,13 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..operators import interval, normalize
 from .registry import query
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, name)
 
 
 @query(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from ..catalog import load as _t
 from ..sources.partsupp import derived_partsupp
 from .registry import query
 
@@ -53,10 +53,6 @@ _PS_CTE = """
       FROM ps0
     )
 """
-
-
-def _t(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return catalog.load(spark, sf_dir, table)
 
 
 @query(

@@ -18,3 +18,19 @@ def spark():
     s = get_spark("tests", master="local[8]")
     yield s
     s.stop()
+
+
+def build_jobs(spark, build, group: str) -> list[int]:
+    """Ids of the Spark jobs launched while ``build()`` runs, ascending:
+    ``build`` runs under job group ``group``, and the status tracker is
+    read once the listener bus has delivered every event posted so far
+    (the tracker is filled by a listener, so a job can still be missing
+    from it right after ``build`` returns)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group) or [])

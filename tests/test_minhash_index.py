@@ -20,7 +20,7 @@ from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.operators 
     dedup,
     ledger,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, build_jobs
 
 
 
@@ -68,6 +68,23 @@ def test_probe_equals_one_shot_index(spark, tmp_path):
     )
     assert _probe_rows(spark, probe, one) == truth
     assert any(corpus_id >= 150 for _, corpus_id, _ in truth)
+
+
+#: Spark jobs of one MinHash index build: the ``shingles`` write, the
+#: footer-schema inference of reading it back (the first probe of the
+#: generation then runs none for it), and the two-stage ``postings``
+#: write over the staged shingles. Deriving ``postings`` from the
+#: documents instead shingles the corpus a second time (3 jobs).
+_MINHASH_BUILD_JOBS = 4
+
+
+def test_minhash_build_shingles_the_corpus_once(spark, tmp_path):
+    d = catalog.load(spark, SF_DIR, "documents")
+    base = str(tmp_path / "mh_build")
+    jobs = build_jobs(
+        spark, lambda: dedup.minhash_index_build(d, base), "minhash-build"
+    )
+    assert len(jobs) == _MINHASH_BUILD_JOBS, jobs
 
 
 def test_compact_preserves_probe_and_folds_layout(spark, tmp_path):

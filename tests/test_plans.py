@@ -15,7 +15,7 @@ from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.queries im
     QUERIES,
 )
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR, build_jobs
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -801,18 +801,6 @@ def test_plan_build_round_trips_are_pinned(spark):
     assert not over, (over, trips)
 
 
-def _build_jobs(spark, build, group: str) -> int:
-    """Spark jobs launched while ``build()`` runs (a job group and the
-    status tracker)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        build()
-    finally:
-        sc.setJobGroup("", "")
-    return len(sc.statusTracker().getJobIdsForGroup(group) or [])
-
-
 #: Spark jobs one fixpoint query may launch while building (sf0.001,
 #: local[8]): now 29 / 45 / 16. Connected components runs one job per
 #: round, because its convergence count is an Observation on the eager
@@ -830,8 +818,12 @@ def test_fixpoint_build_jobs_are_pinned(spark):
     for name in _FIXPOINT_JOB_CEILINGS:
         QUERIES[name](spark, SF_DIR)  # warm the catalog memo
     jobs = {
-        n: _build_jobs(
-            spark, lambda n=n: QUERIES[n](spark, SF_DIR), f"fixpoint-build-{n}"
+        n: len(
+            build_jobs(
+                spark,
+                lambda n=n: QUERIES[n](spark, SF_DIR),
+                f"fixpoint-build-{n}",
+            )
         )
         for n in _FIXPOINT_JOB_CEILINGS
     }
@@ -895,7 +887,7 @@ def test_index_probe_and_search_builds_launch_no_jobs(spark, hot_indexes):
     over base + delta runs no footer-schema inference job: every index
     table is read through catalog.read_parquet's memo."""
     jobs = {
-        name: _build_jobs(spark, build, f"hot-build-{name}")
+        name: len(build_jobs(spark, build, f"hot-build-{name}"))
         for name, build in hot_indexes.items()
     }
     assert jobs == {"minhash_index_probe": 0, "ivf_index_search": 0}
@@ -956,7 +948,7 @@ def test_ivf_whole_operation_jobs_are_pinned(spark, tmp_path):
     for op in ops.values():
         op(0)  # the first reads memoize the schemas
     jobs = {
-        name: _build_jobs(spark, lambda op=op: op(1), f"ivf-{name}")
+        name: len(build_jobs(spark, lambda op=op: op(1), f"ivf-{name}"))
         for name, op in ops.items()
     }
     over = {n: c for n, c in jobs.items() if c > _IVF_OP_JOB_CEILINGS[n]}
@@ -986,10 +978,12 @@ def test_minhash_append_jobs_are_pinned(spark, tmp_path):
     dedup.minhash_index_build(docs.filter(F.col("doc_id") < 300), mh)
     sink = dedup.minhash_index_append(mh)
     sink(docs.filter(F.col("doc_id").between(300, 349)), 0)
-    jobs = _build_jobs(
-        spark,
-        lambda: sink(docs.filter(F.col("doc_id").between(350, 399)), 1),
-        "minhash-append",
+    jobs = len(
+        build_jobs(
+            spark,
+            lambda: sink(docs.filter(F.col("doc_id").between(350, 399)), 1),
+            "minhash-append",
+        )
     )
     assert jobs <= _MINHASH_APPEND_JOB_CEILING, jobs
 
@@ -1015,8 +1009,8 @@ def test_dag_task_jobs_are_pinned(spark, tmp_path):
     spec = dag_factory.trips_pipeline_spec(VENDORS, raw, str(tmp_path / "out"))
     spec.run_locally(spark)
     jobs = {
-        t.task_id: _build_jobs(
-            spark, lambda t=t: t.fn(spark, t.conf), f"dag-{t.task_id}"
+        t.task_id: len(
+            build_jobs(spark, lambda t=t: t.fn(spark, t.conf), f"dag-{t.task_id}")
         )
         for t in spec.topo_order()
     }
@@ -1083,13 +1077,8 @@ def test_ewma_user_grouped_stage_keeps_full_width(spark):
     coalescing would squeeze it onto one or two."""
     sc = spark.sparkContext
     df = QUERIES["a_ewma_user"](spark, SF_DIR)
-    sc.setJobGroup("ewma-width", "a_ewma_user")
-    try:
-        df.collect()
-    finally:
-        sc.setJobGroup("", "")
     tracker = sc.statusTracker()
-    last_job = max(tracker.getJobIdsForGroup("ewma-width"))
+    last_job = max(build_jobs(spark, df.collect, "ewma-width"))
     # the result stage is created after its parents: the largest id
     grouped = tracker.getStageInfo(max(tracker.getJobInfo(last_job).stageIds))
     assert grouped.numTasks >= sc.defaultParallelism, grouped

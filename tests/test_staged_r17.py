@@ -11,7 +11,7 @@ from end_to_end_mlops_airflow_cloudformation_great_expectations_spark.queries im
     ORACLES,
     QUERIES,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, build_jobs
 
 
 def test_round11_names_registered_and_oracle_backed():
@@ -158,25 +158,22 @@ def test_bpe_checkpoint_rounds_build_jobs_bounded(spark):
         catalog,
     )
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     docs = catalog.load(spark, SF_DIR, "documents")
 
-    sc.setJobGroup("bpe-persist-probe", "persist build")
-    try:
-        T.bpe_merge_rounds(docs, k=3, return_tokens=True)  # persist path
-        persist_jobs = set(tracker.getJobIdsForGroup("bpe-persist-probe") or [])
-    finally:
-        sc.setJobGroup("", "")
+    # persist path
+    persist_jobs = set(
+        build_jobs(
+            spark,
+            lambda: T.bpe_merge_rounds(docs, k=3, return_tokens=True),
+            "bpe-persist-probe",
+        )
+    )
     assert persist_jobs == set(), f"persist build ran jobs: {persist_jobs}"
 
     k = 6
-    sc.setJobGroup("bpe-ckpt-probe", "checkpoint build")
-    try:
-        T.bpe_merge_rounds(docs, k=k)
-        ckpt_jobs = set(tracker.getJobIdsForGroup("bpe-ckpt-probe") or [])
-    finally:
-        sc.setJobGroup("", "")
+    ckpt_jobs = set(
+        build_jobs(spark, lambda: T.bpe_merge_rounds(docs, k=k), "bpe-ckpt-probe")
+    )
     # O(k): a handful of shuffle-stage jobs per round; re-execution of
     # earlier rounds would be quadratic (~k^2/2 extra jobs). The r11
     # optimization pass persists each round's 1-row winner (so the
