@@ -102,14 +102,14 @@ def profile(
         tracer.call("exec", name, df.write.format("noop").mode("overwrite").save)
         spark.catalog.clearCache()
         tracer.collect()
-        walls.append(round(tracer.spans[-2].dur + tracer.spans[-1].dur, 3))
-    build, run = tracer.spans[-2:]
+        build, run = tracer.spans[-2:]
+        walls.append(round(build.dur + run.dur, 3))
     job_spans = {"build": build.stats.job_spans, "exec": run.stats.job_spans}
-    wall = build.dur + run.dur
+    gap = build.dur + run.dur - union_s(job_spans["build"] + job_spans["exec"])
     return {
         "build": _counts(build),
         "exec": _counts(run),
-        "driver_gap_s": round(wall - union_s(job_spans["build"] + job_spans["exec"]), 3),
+        "driver_gap_s": round(gap, 3),
         "walls": walls,
         "job_spans": job_spans,
     }
